@@ -2,10 +2,13 @@
 construction engine with the query/data-processing capabilities of the
 DeepIE reference (loujie0822/DeepIE).
 
-Pipeline (staged DataFrame passes, each checkpointable):
+Pipeline (DataFrame passes, each a checkpointed lakehouse stage):
 
-    pages -> texts -> tokens -> mentions -> subjects -> po -> raw_triples
-          -> triples -> linked -> canonical -> kg (MERGE)
+    pages -> texts -> triples -> linked -> entity_clusters -> kg (MERGE)
+               \\-> tokens -> mentions
+
+``triples`` runs the whole extraction cascade (subject grid ->
+per-subject object grid -> assemble) in one fused, page-local pass.
 
 Everything is DataFrame/Catalyst-first; Python appears only inside
 Arrow-batched pandas UDFs (never per-row Python), per the build contract.
@@ -21,7 +24,6 @@ _EXPORTS = {
     "PageExtractor": "deepie_spark.operators.extract",
     "extract_triples_fused": "deepie_spark.operators.extract",
     "extract_triples_fused_dedup": "deepie_spark.operators.extract",
-    "extract_triples_staged": "deepie_spark.operators.extract",
     "StlExtractor": "deepie_spark.operators.etl_stl",
     "detect_mentions": "deepie_spark.operators.linking",
     "link_triples": "deepie_spark.operators.linking",

@@ -56,7 +56,7 @@ class PageScan(NamedTuple):
     ``hidden``: encoder states [n_wrapped, d_model] when the model has
     a transformer encoder (NeuralTriggerModel), else None.  Carrying
     the states here means one forward pass per page even when the
-    staged path asks for many per-subject object grids."""
+    cascade asks for many per-subject object grids."""
 
     hits: list[tuple[int, int, int, int, int]]
     hidden: np.ndarray | None = None
@@ -266,7 +266,7 @@ class NeuralTriggerModel(TriggerModel):
     triples, while the grid values depend on the full >=10 MB weight
     artifact shipped through the broadcast.  One forward pass per page:
     ``scan`` computes the hidden states once and PageScan carries them
-    to every grid request (the staged path's per-subject po grids reuse
+    to every grid request (the cascade's per-subject po grids reuse
     them for free)."""
 
     def __init__(self, schema, tokenizer, trie, encoder):

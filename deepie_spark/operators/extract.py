@@ -1,21 +1,16 @@
-"""Distributed extraction stages (the CasRel cascade, Spark-first).
+"""Distributed extraction (the CasRel cascade, Spark-first).
 
-Two physical strategies over the same kernels:
-
-**Fused path** (``extract_triples_fused``) — one ``mapInPandas`` pass:
+One physical path: ``extract_triples_fused`` runs the whole cascade —
 tokenize -> subject grid -> decode -> per-subject po grid -> decode ->
-assemble, all page-local.  Zero shuffles; this is the 100-TB production
-plan (the reference's cascade re-batches per subject only because GPU
-batching wants it — multi_pointer_net.py:96-123; on Spark the fan-out
-is page-local and free).
+assemble — page-locally inside one ``mapInPandas`` pass.  Zero
+shuffles; the reference re-batches per subject only because GPU
+batching wants it (multi_pointer_net.py:96-123); on Spark the fan-out
+is page-local and free.  ``KgPipeline``'s ``triples`` stage runs it
+over the committed ``texts`` table.
 
-**Staged path** (``stage_*`` functions) — explicit stage tables
-(texts -> tokens -> subjects -> po -> triples) for the checkpoint/
-resume/lineage story (north rule).  The subject fan-out is a real
-``explode``-style row expansion, the reference's ``.expand`` analogue.
-
-Both paths MUST produce identical triples (tested), and each page's
-result must equal the single-row oracle ``extract_page_py`` —
+``stage_texts`` / ``stage_tokens`` are the pipeline's ``texts`` and
+``tokens`` stage kernels (``tokens`` feeds mention detection).  Each
+page's triples must equal the single-row oracle ``extract_page_py`` —
 byte-identical per url, independent of Arrow batch boundaries.
 """
 
@@ -49,11 +44,6 @@ TRIPLES_DDL = (
 TOKENS_DDL = (
     "url string, lang string, context string, tokens array<string>, "
     "tok_start array<int>, tok_end array<int>"
-)
-SUBJECTS_DDL = TOKENS_DDL + ", s1 int, s2 int"
-PO_DDL = (
-    "url string, context string, tok_start array<int>, tok_end array<int>, "
-    "s1 int, s2 int, o1 int, o2 int, predicate_id int"
 )
 
 
@@ -241,7 +231,7 @@ def extract_triples_fused_dedup(pages_df, extractor_bc, text_col: str = "text"):
     )
 
 
-# ---- staged distributed path ------------------------------------------------
+# ---- pipeline stage kernels ------------------------------------------------
 
 
 def stage_texts(pages_df):
@@ -285,163 +275,6 @@ def stage_tokens(texts_df, extractor_bc):
             yield pd.DataFrame(out)
 
     return texts_df.mapInPandas(kernel, TOKENS_DDL)
-
-
-def stage_subjects(tokens_df, extractor_bc):
-    """tokens -> one row per decoded subject (the cascade fan-out;
-    reference zero-copy ``.expand``, multi_pointer_net.py:96-123)."""
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ex: PageExtractor = extractor_bc.value
-        cols = ["url", "lang", "context", "tokens", "tok_start", "tok_end", "s1", "s2"]
-        for pdf in it:
-            rows = []
-            # batch the page scans (ragged stacked forwards) exactly
-            # like the fused kernel; decode per page is unchanged
-            prepared = [
-                (r.context, list(r.tokens), list(r.tok_start), list(r.tok_end))
-                for r in pdf.itertuples(index=False)
-            ]
-            scans = ex.model.scan_pages(prepared)
-            for r, (_, tokens, _, _), scan in zip(
-                pdf.itertuples(index=False), prepared, scans
-            ):
-                n = len(tokens) + 2
-                s_start, s_end = ex.model.subject_support(scan)
-                for s1, s2 in decode_subjects_sparse(s_start, s_end, n):
-                    rows.append(
-                        (r.url, r.lang, r.context, tokens,
-                         list(r.tok_start), list(r.tok_end), s1, s2)
-                    )
-            yield pd.DataFrame(rows, columns=cols)
-
-    return tokens_df.mapInPandas(kernel, SUBJECTS_DDL)
-
-
-def stage_po(subjects_df, extractor_bc, scan_counter=None, presort: bool = True):
-    """subjects -> decoded (url, s-span, o-span, predicate_id) rows.
-
-    The kernel memoizes the page-level scan (tokenize + transformer
-    forward) across a page's subject rows, so the fan-out costs one
-    forward per PAGE, not per subject.  The memo keys on adjacency,
-    which the direct ``stage_subjects`` output guarantees (fan-out
-    order) but an intervening repartition silently would not — so by
-    default the input is ``sortWithinPartitions(url)`` first: a
-    partition-LOCAL sort (no exchange; SortExec without a shuffle,
-    plan-tested) that restores adjacency within every partition no
-    matter how rows were scattered.  Degradation bound after an
-    arbitrary repartition: one scan per (partition, url) pair — at
-    worst min(n_partitions, n_subjects) per page, never one per
-    subject row (tested in test_extract_e2e).  ``scan_counter``: an
-    optional Spark accumulator incremented once per actual scan, used
-    by tests to pin that bound."""
-
-    if presort:
-        subjects_df = subjects_df.sortWithinPartitions("url")
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ex: PageExtractor = extractor_bc.value
-        cols = ["url", "context", "tok_start", "tok_end", "s1", "s2", "o1", "o2",
-                "predicate_id"]
-        last_url, last_scan = None, None
-        for pdf in it:
-            rows = []
-            rows_in = list(pdf.itertuples(index=False))
-            # one scan per DISTINCT url in the batch (was: one per
-            # adjacent url run), and all of the batch's scans share
-            # ragged stacked forwards like the fused kernel.  The
-            # carry across Arrow batches keeps the old guarantee that
-            # a page spanning a batch boundary is not re-scanned.
-            need: dict[str, int] = {}
-            for idx, r in enumerate(rows_in):
-                if r.url != last_url and r.url not in need:
-                    need[r.url] = idx
-            scans_by_url: dict[str, object] = {}
-            if need:
-                prepared = [
-                    (
-                        rows_in[i].context, list(rows_in[i].tokens),
-                        list(rows_in[i].tok_start), list(rows_in[i].tok_end),
-                    )
-                    for i in need.values()
-                ]
-                batch_scans = ex.model.scan_pages(prepared)
-                scans_by_url = dict(zip(need.keys(), batch_scans))
-                if scan_counter is not None:
-                    scan_counter.add(len(need))
-            for r in rows_in:
-                tokens = list(r.tokens)
-                n = len(tokens) + 2
-                scan = (
-                    last_scan if r.url == last_url else scans_by_url[r.url]
-                )
-                o_start, o_end = ex.model.po_support(scan, (r.s1, r.s2))
-                po = decode_po_sparse(o_start, o_end, n)
-                if not po:
-                    # subjects with no object still participate in
-                    # regrouping (empty spoes entry), keep a marker row
-                    rows.append((r.url, r.context, list(r.tok_start),
-                                 list(r.tok_end), r.s1, r.s2, -1, -1, -1))
-                for o1, o2, p in po:
-                    rows.append((r.url, r.context, list(r.tok_start),
-                                 list(r.tok_end), r.s1, r.s2, o1, o2, p))
-            if rows_in:
-                tail = rows_in[-1].url
-                if tail in scans_by_url:
-                    last_scan = scans_by_url[tail]
-                last_url = tail  # else: tail was the carried page
-            yield pd.DataFrame(rows, columns=cols)
-
-    return subjects_df.mapInPandas(kernel, PO_DDL)
-
-
-def stage_triples(po_df, extractor_bc):
-    """po rows -> assembled triples.  Regrouping is per-url local
-    (the reference's convert2ressult is per-document state,
-    train.py:262-353); physically it's a JVM-side ``collect_list``
-    pack per url followed by ONE mapInPandas pass — NOT
-    groupBy.applyInPandas, whose per-group pandas materialization is
-    ruinous for millions of tiny (one-page) groups."""
-    from pyspark.sql import functions as F
-
-    packed = po_df.groupBy("url").agg(
-        F.first("context").alias("context"),
-        F.first("tok_start").alias("tok_start"),
-        F.first("tok_end").alias("tok_end"),
-        F.collect_list(
-            F.struct("s1", "s2", "o1", "o2", "predicate_id")
-        ).alias("pos"),
-    )
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ex: PageExtractor = extractor_bc.value
-        cols = ["url", "subject", "subject_type", "predicate", "object", "object_type"]
-        for pdf in it:
-            rows: list[tuple] = []
-            for r in pdf.itertuples(index=False):
-                spoes: dict[tuple[int, int], list[tuple[int, int, int]]] = {}
-                for p in r.pos:
-                    spoes.setdefault((p["s1"], p["s2"]), [])
-                    if p["predicate_id"] >= 0:
-                        spoes[(p["s1"], p["s2"])].append(
-                            (p["o1"], p["o2"], p["predicate_id"])
-                        )
-                triples = assemble_triples(
-                    r.context, list(r.tok_start), list(r.tok_end),
-                    spoes, ex.schema,
-                )
-                rows.extend(_triples_to_rows(r.url, triples))
-            yield pd.DataFrame(rows, columns=cols)
-
-    return packed.mapInPandas(kernel, TRIPLES_DDL)
-
-
-def extract_triples_staged(pages_df, extractor_bc):
-    texts = stage_texts(pages_df)
-    tokens = stage_tokens(texts, extractor_bc)
-    subjects = stage_subjects(tokens, extractor_bc)
-    po = stage_po(subjects, extractor_bc)
-    return stage_triples(po, extractor_bc)
 
 
 # ---- encoder grid verification ------------------------------------------------

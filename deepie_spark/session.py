@@ -1,9 +1,9 @@
 """SparkSession factory tuned for this engine.
 
-Local-mode testing uses ``local[N]``; on a real cluster the same confs
-apply (AQE, Arrow, skew-join). Shuffle partitions default to the local
-core count — on a 1000-executor cluster this should be set to
-~2-3x total cores via spark-submit conf, not here.
+Local-mode testing uses ``local[N]``, N defaulting to the host's cores;
+on a real cluster the same confs apply (AQE, Arrow, skew-join). Shuffle
+partitions default to the local core count — on a 1000-executor cluster
+this should be set to ~2-3x total cores via spark-submit conf, not here.
 """
 
 from __future__ import annotations
@@ -95,6 +95,22 @@ def ship_package(spark: SparkSession) -> None:
     spark.sparkContext.addPyFile(build_pyfiles_zip())
 
 
+def _host_cores() -> int:
+    """Cores this process may run on (its CPU affinity)."""
+    return len(os.sched_getaffinity(0))
+
+
+def default_master() -> str:
+    """``local[$SPARK_GRAFT_CPUS]``, else ``local[<host cores>]``."""
+    return f"local[{os.environ.get('SPARK_GRAFT_CPUS') or _host_cores()}]"
+
+
+def _default_shuffle_partitions(master: str) -> int:
+    """``local[N]`` -> N; ``local[*]`` or no core count -> host cores."""
+    n = master[master.find("[") + 1 : master.find("]")] if "[" in master else "*"
+    return _host_cores() if n == "*" else int(n)
+
+
 def get_spark(
     app_name: str = "deepie_spark",
     master: str | None = None,
@@ -102,11 +118,9 @@ def get_spark(
     extra_conf: dict | None = None,
     ship: bool = True,
 ) -> SparkSession:
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    master = master or default_master()
     if shuffle_partitions is None:
-        n = master[master.find("[") + 1 : master.find("]")] if "[" in master else cpus
-        shuffle_partitions = 32 if n == "*" else int(n)
+        shuffle_partitions = _default_shuffle_partitions(master)
     # one BLAS thread per python worker: Spark already runs one worker
     # per core, so any BLAS-internal threading (OpenBLAS spawns up to
     # MAX_THREADS per process for the batched encoder matmuls) just
@@ -129,15 +143,15 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("DEEPIE_DRIVER_MEM", "8g"))
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # floor on SCAN parallelism, derived from the session's core
-        # count (scale-adaptive, not a local[32] constant): without it
-        # a compact parquet input packs into ~1 task per core — a
-        # single wave, so the job's wall time is its slowest task and
-        # every early-finishing core idles (measured occupancy 0.78 on
-        # the replicated-corpus extraction).  3 waves keeps stragglers
-        # amortized; maxPartitionBytes still caps split size for big
-        # inputs, so this only bites when the scan would otherwise
-        # under-parallelize.
+        # floor on SCAN parallelism: 6 splits per shuffle partition
+        # (6 waves when shuffle partitions equal the core count, the
+        # default).  Without it a compact parquet input packs into ~1
+        # task per core — a single wave, so the job's wall time is its
+        # slowest task and every early-finishing core idles (measured
+        # occupancy 0.78 on the replicated-corpus extraction).  More
+        # waves keep stragglers amortized; maxPartitionBytes still caps
+        # split size for big inputs, so this only bites when the scan
+        # would otherwise under-parallelize.
         .config(
             "spark.sql.files.minPartitionNum", str(6 * int(shuffle_partitions))
         )

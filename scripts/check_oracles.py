@@ -63,8 +63,7 @@ def main():
 
     from deepie_spark.session import get_spark
 
-    spark = get_spark(app_name="oracle_check", master="local[8]",
-                      shuffle_partitions=8)
+    spark = get_spark(app_name="oracle_check", shuffle_partitions=8)
 
     con = duckdb.connect()
     for t in TABLES:

@@ -7,7 +7,7 @@
             scripts/run_pipeline.py \\
             --pages <parquet path or 'synth:N'> \\
             --lake /path/to/lake --run-id crawl-2026-08-16 \\
-            [--aliases <parquet>] [--resume] [--fused]
+            [--aliases <parquet>] [--resume]
 
 On a cluster, add --master/--num-executors etc. as usual; the script
 only uses the session it is given (spark-submit builds it).
@@ -31,8 +31,6 @@ def main(argv=None) -> int:
     p.add_argument("--lake", required=True)
     p.add_argument("--run-id", default=f"run-{int(time.time())}")
     p.add_argument("--resume", action="store_true")
-    p.add_argument("--fused", action="store_true",
-                   help="fused single-pass extraction (no stage checkpoints)")
     p.add_argument("--max-seq-length", type=int, default=256)
     args = p.parse_args(argv)
 
@@ -62,10 +60,7 @@ def main(argv=None) -> int:
         SYNTH_SCHEMA, world_aliases, max_seq_length=args.max_seq_length
     )
     pipe = KgPipeline(spark, args.lake, extractor, run_id=args.run_id)
-    res = pipe.run(
-        pages_df, alias_df, resume=args.resume,
-        staged_extraction=not args.fused,
-    )
+    res = pipe.run(pages_df, alias_df, resume=args.resume)
     kg = pipe.lake.read("kg_triples")
     summary = {
         "run_id": args.run_id,

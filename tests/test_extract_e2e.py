@@ -1,12 +1,9 @@
 """End-to-end extraction: oracle P/R vs planted gold, distributed ==
-oracle (the per-url invariant), fused == staged, Arrow-batch invariance."""
+oracle (the per-url invariant), Arrow-batch invariance."""
 
 import pytest
 
-from deepie_spark.operators.extract import (
-    extract_triples_fused,
-    extract_triples_staged,
-)
+from deepie_spark.operators.extract import extract_triples_fused
 from deepie_spark.sources.synth import corpus_dataframes, gen_corpus
 
 N_PAGES = 250
@@ -53,15 +50,6 @@ def test_fused_equals_oracle(spark, corpus, extractor):
         for t in extractor.extract_page_py(p["text"]):
             want.add(_key(p["url"], t["subject"], t["predicate"], t["object"]))
     assert got == want
-
-
-def test_staged_equals_fused(spark, corpus, extractor):
-    pages_df, _, _ = corpus_dataframes(spark, N_PAGES)
-    bc = spark.sparkContext.broadcast(extractor)
-    fused = _collect_triples(extract_triples_fused(pages_df, bc))
-    staged = _collect_triples(extract_triples_staged(pages_df, bc))
-    assert staged == fused
-    assert len(fused) > 0
 
 
 def test_arrow_batch_size_invariance(spark, extractor):
@@ -164,53 +152,3 @@ def test_fused_dedup_plan_single_text_exchange(spark, extractor):
     for seg in exchanges_with_text:
         key = seg.split("\n")[0]
         assert not key.strip().startswith("(text#"), key
-
-
-def test_stage_po_one_scan_per_page_and_bounded_after_repartition(
-    spark, corpus, extractor
-):
-    """The stage_po scan memo must cost one forward per PAGE on the
-    direct fan-out output, and stay bounded by one scan per
-    (partition, url) — never one per subject row — after an arbitrary
-    repartition scatters the fan-out adjacency (round-4 verdict #5).
-    The partition-local sort restores adjacency without a shuffle."""
-    from deepie_spark.operators.extract import (
-        stage_po,
-        stage_subjects,
-        stage_texts,
-        stage_tokens,
-        stage_triples,
-    )
-
-    pages_df, _, _ = corpus_dataframes(spark, N_PAGES)
-    bc = spark.sparkContext.broadcast(extractor)
-    tokens = stage_tokens(stage_texts(pages_df), bc)
-    subjects = stage_subjects(tokens, bc).cache()
-    n_subjects = subjects.count()
-    n_pages_with_subjects = subjects.select("url").distinct().count()
-    assert n_subjects > n_pages_with_subjects  # fan-out is real
-
-    acc = spark.sparkContext.accumulator(0)
-    baseline = _collect_triples(
-        stage_triples(stage_po(subjects, bc, scan_counter=acc), bc)
-    )
-    assert acc.value == n_pages_with_subjects  # one scan per page
-
-    # scatter adjacency: round-robin repartition interleaves pages
-    n_parts = 8
-    scattered = subjects.repartition(n_parts)
-    acc2 = spark.sparkContext.accumulator(0)
-    got = _collect_triples(
-        stage_triples(stage_po(scattered, bc, scan_counter=acc2), bc)
-    )
-    assert got == baseline
-    # local sort bound: one scan per (partition, url), never per row
-    assert acc2.value <= min(n_parts * n_pages_with_subjects, n_subjects)
-    assert acc2.value < n_subjects  # strictly better than no memo
-
-    # the presort must be partition-local: no Exchange added vs input
-    plan = stage_po(scattered, bc)._jdf.queryExecution().executedPlan().toString()
-    pre, _, post = plan.partition("MapInPandas")
-    assert "Sort " in post or "Sort\n" in post or "sortOrder" in post or "Sort" in post
-    assert post.count("Exchange") == scattered._jdf.queryExecution().executedPlan().toString().count("Exchange")
-    subjects.unpersist()

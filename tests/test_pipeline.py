@@ -24,6 +24,20 @@ def test_pipeline_end_to_end_and_resume(spark, extractor, corpus_dfs, tmp_path_f
     res1 = pipe.run(pages_df, alias_df)
     assert "triples" in res1.stages_run and not res1.stages_skipped
 
+    # the committed triples stage is exactly the single-row oracle,
+    # page by page
+    def key(url, t):
+        return (url, t["subject"], t["predicate"],
+                tuple(sorted(dict(t["object"]).items())))
+
+    got = sorted(key(r["url"], r) for r in pipe.lake.read("triples").collect())
+    want = sorted(
+        key(p["url"], t)
+        for p in pages_df.select("url", "text").collect()
+        for t in extractor.extract_page_py(p["text"])
+    )
+    assert got == want and len(want) > 0
+
     kg = pipe.lake.read("kg_triples")
     prf = M.micro_prf(M.triple_counts(kg, gold_df)).first()
     assert prf["precision"] >= 0.95 and prf["recall"] >= 0.95, dict(prf.asDict())

@@ -14,16 +14,18 @@ Prints ONE JSON line:
 - kg_pipeline: the full checkpointed pipeline (pages -> triples ->
   linked -> canonical -> MERGE) end-to-end into a fresh lakehouse;
 - scaling: the north rule's N -> 4N evidence, measured at TWO pairs:
-  8 -> 32 (primary, with full host decomposition) and 2 -> 8 (same
-  job and shape, below the shared host's all-core turbo/steal cliff —
+  SCALING_LEVELS = (cores // 4, cores), from this process's CPU
+  affinity or $SPARK_GRAFT_CPUS (primary, with full host
+  decomposition), and 2 -> 8 (same job and shape, below the shared
+  host's all-core turbo/steal cliff —
   the busy-loop probe itself scales as low as 0.65 at 8 -> 32 in a
   bad hour, capping any engine's raw number; a real 4N-executor
   cluster adds machines, not contended sibling cores).
 
-Scaling methodology (the 8 -> 32 measurement)
----------------------------------------------
-The same flagship job on the same materialized input at local[8] vs
-local[32], each invocation CPU-affinity-pinned so "8 cores" means 8
+Scaling methodology (the N -> 4N measurement, e.g. 8 -> 32)
+-----------------------------------------------------------
+The same flagship job on the same materialized input at local[N] vs
+local[4N], each invocation CPU-affinity-pinned so "8 cores" means 8
 cores for the WHOLE process tree (JVM scan/GC threads + python
 workers), as on a real 8-core executor.
 
@@ -76,7 +78,7 @@ for _var in ("OPENBLAS_NUM_THREADS", "OMP_NUM_THREADS", "MKL_NUM_THREADS"):
     os.environ.setdefault(_var, "1")
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
 BENCH_TMP = Path(os.environ.get("DEEPIE_BENCH_TMP", "/tmp/deepie_bench"))
 
 BENCH_QUERIES = [
@@ -169,7 +171,7 @@ SCALING_REPLICATE = int(os.environ.get("DEEPIE_SCALING_REPLICATE", "256"))
 # forward per page (functions/encoder.py), ~1.6x the per-page work; 256
 # copies keeps the 32-core leg >=60 s without inflating the 8-core leg
 # (the scaling ratio is replicate-invariant — same job, same skew)
-SCALING_LEVELS = (8, 32)  # the north rule's N -> 4N pair
+SCALING_LEVELS = (max(1, CPUS // 4), CPUS)  # the north rule's N -> 4N pair
 SCALING_ROUNDS = int(os.environ.get("DEEPIE_SCALING_ROUNDS", "5"))
 # ~16 MB splits -> ~90 tasks (~3 waves at 32 cores) on the replicated
 # corpus: still enough waves that one straggler doesn't extend the
@@ -246,9 +248,10 @@ def _kernel_probe(levels=SCALING_LEVELS, n_pages: int = 800,
         pages = [(p["url"], p["text"]) for p in pages_rows]
     ex_blob = pickle.dumps(PageExtractor(SYNTH_SCHEMA, gen_world().alias_rows))
     out: dict = {"pages_per_sec": {}}
+    host_cpus = os.sched_getaffinity(0)
     for n in levels:
         try:
-            os.sched_setaffinity(0, set(range(n)))
+            os.sched_setaffinity(0, set(sorted(host_cpus)[:n]))
         except (AttributeError, OSError):
             pass
         q = mp.Queue()
@@ -264,7 +267,7 @@ def _kernel_probe(levels=SCALING_LEVELS, n_pages: int = 800,
         wall = time.time() - t0
         out["pages_per_sec"][str(n)] = round(n * reps * len(pages) / wall, 1)
     try:
-        os.sched_setaffinity(0, set(range(os.cpu_count() or 32)))
+        os.sched_setaffinity(0, host_cpus)
     except (AttributeError, OSError):
         pass
     lo, hi = levels
@@ -298,7 +301,7 @@ def flagship_only(cpus: int) -> None:
     cores the engine kept busy), total task core-seconds, and a
     bracketing busy-loop host probe."""
     try:
-        os.sched_setaffinity(0, set(range(cpus)))
+        os.sched_setaffinity(0, set(sorted(os.sched_getaffinity(0))[:cpus]))
     except (AttributeError, OSError):
         pass  # non-linux: fall back to unpinned
     probe0 = _probe_at(cpus)
@@ -498,13 +501,14 @@ def run_scaling(
 
 def run_skew_bench(spark, sf_dir: str) -> dict:
     """Hub-entity skew at bench scale (round-4 verdict #7): the same
-    tokens -> mentions -> salted counts -> extract -> link -> CC chain
-    over two corpora of IDENTICAL size — one where a single entity's
-    page is replicated until it carries ~30% of all mentions (a
-    celebrity on a web crawl), one where the same number of replicas
-    spread uniformly over distinct pages.  Records both walls and the
-    skew/uniform ratio; the salted two-phase aggregation and the
-    distinct-before-CC design are what keep the ratio near 1.0 (an
+    tokens -> mentions -> salted counts -> extract -> link ->
+    canonicalize chain over two corpora of IDENTICAL size — one where a
+    single entity's page is replicated until it carries ~30% of all
+    mentions (a celebrity on a web crawl), one where the same number of
+    replicas spread uniformly over distinct pages.  Records both walls
+    and the skew/uniform ratio; the salted two-phase aggregation and
+    canonicalizing distinct surfaces (one broadcast join against the
+    dictionary's clusters) are what keep the ratio near 1.0 (an
     unsalted plan funnels the hub's rows into one reducer and the
     ratio grows with the replica count)."""
     from deepie_spark.config.schema import SYNTH_SCHEMA
@@ -578,7 +582,7 @@ def run_skew_bench(spark, sf_dir: str) -> dict:
         df.unpersist()
         return round(sec, 3)
 
-    chain(uni_rows)  # full-size warm: workers, broadcasts, CC lineage
+    chain(uni_rows)  # full-size warm: workers, broadcasts
     uni = chain(uni_rows)
     skew = chain(skew_rows)
     return {

@@ -1,24 +1,27 @@
-"""Entity canonicalization: connected components over a similarity graph.
+"""Entity canonicalization, and connected components over a graph.
 
 No reference analogue (its entity-linking module is empty) — this is
 the north rule's "distributed canonicalization via connected-components
 over a salted entity-similarity graph".
 
-Nodes are normalized surface keys (hashed to int64); edges come from
-  (a) alias co-membership: two aliases of the same canonical_id,
-  (b) exact normalized-surface equality between extracted surfaces and
-      aliases (implicit: same node id).
-Shared aliases between two entities merge their clusters — exactly the
-behavior CC is for.
+Entity clusters (``canonicalize_entities``): nodes are normalized
+surface keys hashed to int64.  Two aliases of one canonical_id share
+a cluster, so an alias shared by two entities merges theirs; a surface
+joins a cluster by equal normalized key (same node id).  Triples add
+no edges, so the graph is the alias dictionary the extractor already
+broadcasts whole: ``alias_components`` solves it by a driver-side
+union-find over one small collect, and one broadcast join applies it
+(no fixpoint, no shuffle of the triple side).
 
-Algorithm: alternating large-star / small-star (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SOCC'14 — public), all
-DataFrame joins, a lineage cut each round (``localCheckpoint`` by
-default; reliable ``checkpoint()`` or resumable parquet round
-snapshots on request — see ``connected_components``), convergence =
-edge set unchanged (count + xxhash fingerprint).  For star-shaped
-alias graphs this converges in 2-3 rounds; the iteration cap guards
-pathological chains.
+General operator (``connected_components``, for data-sized graphs:
+``dedup_clusters`` and the CC query).  Alternating large-star /
+small-star (Kiveris et al., "Connected Components in MapReduce and
+Beyond", SOCC'14 — public), all DataFrame joins, a lineage cut each
+round (``localCheckpoint`` by default; reliable ``checkpoint()`` or
+resumable parquet round snapshots on request — see
+``connected_components``), convergence = edge set unchanged (count +
+xxhash fingerprint).  Star-shaped graphs converge in 2-3 rounds; the
+iteration cap guards pathological chains.
 """
 
 from __future__ import annotations
@@ -259,33 +262,48 @@ def node_id(col):
     return F.xxhash64(col)
 
 
-def alias_edges(alias_dim: DataFrame) -> DataFrame:
-    """Edges connecting all normalized aliases of one canonical entity
-    (star around the entity's min alias node)."""
-    a = alias_dim.select(
-        node_id("norm_key").alias("node"), F.col("canonical_id")
-    ).distinct()
-    hub = a.groupBy("canonical_id").agg(F.min("node").alias("hub"))
-    return (
-        a.join(hub, "canonical_id")
-        .where(F.col("node") != F.col("hub"))
-        .select(F.col("node").alias("src"), F.col("hub").alias("dst"))
+def alias_components(alias_dim: DataFrame) -> DataFrame:
+    """(node, component, cluster_canonical_id) for every alias node:
+    the min node id and min canonical_id of its cluster.  Driver-side
+    union-find over the distinct (node, canonical_id) rows; a null
+    canonical_id links nothing, as under an equi-join."""
+    rows = (
+        alias_dim.select(node_id("norm_key").alias("node"), "canonical_id")
+        .distinct()
+        .collect()
+    )
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    first: dict = {}  # canonical_id -> its first alias node
+    for node, cid in rows:
+        parent.setdefault(node, node)
+        if cid is not None:
+            a, b = find(node), find(first.setdefault(cid, node))
+            parent[max(a, b)] = min(a, b)  # every root is its component's min
+    best: dict = {}
+    for node, cid in rows:
+        if cid is not None:
+            r = find(node)
+            best[r] = min(best.get(r, cid), cid)
+    cid_type = alias_dim.schema["canonical_id"].dataType.simpleString()
+    return alias_dim.sparkSession.createDataFrame(
+        [(n, find(n), best.get(find(n))) for n in parent],
+        f"node bigint, component bigint, cluster_canonical_id {cid_type}",
     )
 
 
 def canonicalize_entities(
-    linked_triples: DataFrame,
-    alias_dim: DataFrame,
-    extractor_bc,
-    cc_state_dir: str | None = None,
+    linked_triples: DataFrame, alias_dim: DataFrame, extractor_bc
 ) -> DataFrame:
-    """Assign a cluster id to every distinct subject/object surface.
-
-    Returns (norm_key, node, component, canonical_id) — canonical_id is
-    the smallest linked dictionary id in the component (null for
-    literal-only clusters).  ``cc_state_dir`` routes the CC loop
-    through resumable parquet round snapshots (driver-loss-safe; see
-    ``connected_components``); default is per-round localCheckpoint."""
+    """(component, node, norm_key, cluster_canonical_id) for every
+    distinct subject/object surface; a surface matching no alias is its
+    own cluster (component = node, cluster_canonical_id null)."""
     from deepie_spark.operators.linking import norm_key_udf
 
     norm = norm_key_udf(extractor_bc)
@@ -295,22 +313,11 @@ def canonicalize_entities(
         .where(F.col("norm_key").isNotNull())
         .distinct()
     )
-    surf_nodes = surfaces.withColumn("node", node_id("norm_key"))
-    # surfaces that exactly match an alias share the alias node id, so
-    # alias-star edges connect them transitively
-    edges = alias_edges(alias_dim)
-    # self-edges keep isolated surfaces as singleton components
-    comp = connected_components(edges, state_dir=cc_state_dir)
-    out = surf_nodes.join(comp, "node", "left").withColumn(
-        "component", F.coalesce("component", F.col("node"))
-    )
-    best_alias = (
-        alias_dim.select(
-            node_id("norm_key").alias("node"), "canonical_id"
+    return (
+        surfaces.withColumn("node", node_id("norm_key"))
+        .join(F.broadcast(alias_components(alias_dim)), "node", "left")
+        .select(
+            F.coalesce("component", F.col("node")).alias("component"),
+            "node", "norm_key", "cluster_canonical_id",
         )
-        .join(comp, "node", "left")
-        .withColumn("component", F.coalesce("component", F.col("node")))
-        .groupBy("component")
-        .agg(F.min("canonical_id").alias("cluster_canonical_id"))
     )
-    return out.join(best_alias, "component", "left")

@@ -53,20 +53,12 @@ class KgPipeline:
         extractor,
         run_id: str = "run0",
         url_buckets: int = 32,
-        durable_cc: bool = False,
     ):
         self.spark = spark
         self.lake = Lakehouse(lake_root, spark)
         self.extractor_bc = spark.sparkContext.broadcast(extractor)
         self.run_id = run_id
         self.url_buckets = url_buckets
-        # durable_cc: connected-components rounds snapshot to the lake
-        # (driver-loss resume mid-CC, not just mid-stage); off by
-        # default — stage-level resume already covers the common case
-        # and the snapshots cost one parquet round-trip per CC round
-        self.cc_state_dir = (
-            f"{lake_root}/_cc_state/{run_id}" if durable_cc else None
-        )
 
     # -- stage definitions -------------------------------------------------
 
@@ -121,9 +113,7 @@ class KgPipeline:
         )
         clusters = self._stage(
             "entity_clusters",
-            lambda: canonicalize_entities(
-                linked, alias_dim, bc, cc_state_dir=self.cc_state_dir
-            ),
+            lambda: canonicalize_entities(linked, alias_dim, bc),
             res, resume,
         )
 

@@ -1,6 +1,14 @@
 import random
 
-from deepie_spark.operators.canonicalize import connected_components
+import pytest
+from pyspark.sql import functions as F
+
+from deepie_spark.operators.canonicalize import (
+    canonicalize_entities,
+    connected_components,
+    node_id,
+)
+from deepie_spark.operators.linking import alias_dim_with_key, norm_key_udf
 
 
 def _cc_oracle(edges):
@@ -166,3 +174,135 @@ def test_cc_state_dir_rejects_stale_snapshots(spark, tmp_path):
     assert got2 == got
     for d in rounds:
         assert os.path.getmtime(os.path.join(state, d, "_SUCCESS")) == mtimes[d]
+
+
+# -- canonicalize_entities vs the connected-components path --------------
+
+ALIAS_DDL = "alias string, canonical_id bigint, entity_type string, weight double"
+LINKED_DDL = "subject string, object map<string,string>"
+
+
+def _cc_reference(linked, alias_dim, bc):
+    """Reference entity clusters from the general operator:
+    connected_components over alias-star edges (every alias node of a
+    canonical_id to that id's min node), then min canonical_id per
+    component."""
+    norm = norm_key_udf(bc)
+    surf = (
+        linked.select(norm("subject").alias("norm_key"))
+        .union(linked.select(norm(F.col("object")["@value"]).alias("norm_key")))
+        .where(F.col("norm_key").isNotNull())
+        .distinct()
+        .withColumn("node", node_id("norm_key"))
+    )
+    a = alias_dim.select(node_id("norm_key").alias("node"), "canonical_id").distinct()
+    hub = a.groupBy("canonical_id").agg(F.min("node").alias("hub"))
+    edges = (
+        a.join(hub, "canonical_id")
+        .where(F.col("node") != F.col("hub"))
+        .select(F.col("node").alias("src"), F.col("hub").alias("dst"))
+    )
+    comp = connected_components(edges)
+    out = surf.join(comp, "node", "left").withColumn(
+        "component", F.coalesce("component", F.col("node"))
+    )
+    best = (
+        alias_dim.select(node_id("norm_key").alias("node"), "canonical_id")
+        .join(comp, "node", "left")
+        .withColumn("component", F.coalesce("component", F.col("node")))
+        .groupBy("component")
+        .agg(F.min("canonical_id").alias("cluster_canonical_id"))
+    )
+    return out.join(best, "component", "left")
+
+
+def _assert_same_clusters(linked, alias_dim, bc):
+    got = canonicalize_entities(linked, alias_dim, bc)
+    want = _cc_reference(linked, alias_dim, bc)
+    assert got.columns == want.columns
+    got_rows = sorted(tuple(r) for r in got.collect())
+    assert got_rows == sorted(tuple(r) for r in want.collect())
+    return got_rows
+
+
+@pytest.fixture(scope="module")
+def bc(spark, extractor):
+    return spark.sparkContext.broadcast(extractor)
+
+
+def test_canonicalize_equals_cc_path_on_synth_corpus(spark, extractor, bc):
+    from deepie_spark.operators.extract import extract_triples_fused
+    from deepie_spark.operators.linking import link_triples
+    from deepie_spark.sources.synth import corpus_dataframes
+
+    pages_df, _gold, alias_df = corpus_dataframes(spark, 120)
+    alias_dim = alias_dim_with_key(alias_df, bc)
+    linked = link_triples(extract_triples_fused(pages_df, bc), alias_dim, bc)
+    rows = _assert_same_clusters(linked, alias_dim, bc)
+    # not vacuous: some surfaces match aliases, some do not
+    assert any(r[3] is not None for r in rows)
+    assert any(r[0] == r[1] and r[3] is None for r in rows)
+    # the dictionary really has norm_keys shared across canonical ids
+    shared = (
+        alias_dim.groupBy("norm_key")
+        .agg(F.countDistinct("canonical_id").alias("n"))
+        .where("n > 1")
+        .count()
+    )
+    assert shared > 0
+
+
+HOSTILE_ALIASES = [
+    # chained ambiguity: 1-2 share "bravo", 2-3 "charlie", 3-4 "delta"
+    ("alpha", 1, "PER", 1.0), ("bravo", 1, "PER", 1.0),
+    ("bravo", 2, "PER", 0.5), ("charlie", 2, "PER", 1.0),
+    ("charlie", 3, "ORG", 1.0), ("delta", 3, "ORG", 1.0),
+    ("delta", 4, "ORG", 1.0), ("echo", 4, "ORG", 1.0),
+    # one norm_key shared by three canonical ids
+    ("hub name", 10, "LOC", 1.0), ("hub name", 11, "LOC", 1.0),
+    ("hub name", 12, "LOC", 1.0), ("ten only", 10, "LOC", 1.0),
+    ("eleven only", 11, "LOC", 1.0), ("twelve only", 12, "LOC", 1.0),
+    # null canonical ids: each stays its own singleton ...
+    ("null one", None, "PER", 1.0), ("null two", None, "PER", 1.0),
+    ("null three", None, "PER", 1.0),
+    # ... unless its key also belongs to a real id
+    ("alpha", None, "PER", 0.1),
+    # an isolated entity
+    ("solo", 20, "ORG", 1.0),
+]
+
+
+def _hostile_linked(spark):
+    surfaces = [
+        "alpha", "echo", "hub name", "ten only", "twelve only", "null one",
+        "null two", "null three", "solo", "not in the dictionary",
+        "another stranger",
+    ]
+    rows = [
+        (s, {"@value": o}) for s, o in zip(surfaces, reversed(surfaces))
+    ]
+    rows.append(("bravo", {"@value": None}))
+    return spark.createDataFrame(rows, LINKED_DDL)
+
+
+def test_canonicalize_equals_cc_path_on_hostile_dictionary(spark, bc):
+    alias_dim = alias_dim_with_key(
+        spark.createDataFrame(HOSTILE_ALIASES, ALIAS_DDL), bc
+    )
+    rows = _assert_same_clusters(_hostile_linked(spark), alias_dim, bc)
+    norm = {r[2]: r for r in rows}
+    key = {s: " ".join(bc.value._alias_tokens(s)) for s, *_ in HOSTILE_ALIASES}
+    chain = {norm[key[s]][0] for s in ("alpha", "bravo", "echo")}
+    assert len(chain) == 1 and norm[key["echo"]][3] == 1
+    hub = {norm[key[s]][0] for s in ("hub name", "ten only", "twelve only")}
+    assert len(hub) == 1 and norm[key["twelve only"]][3] == 10
+    nulls = [norm[key[s]] for s in ("null one", "null two", "null three")]
+    assert len({r[0] for r in nulls}) == 3
+    assert all(r[0] == r[1] and r[3] is None for r in nulls)
+    assert norm[key["solo"]][3] == 20
+
+
+def test_canonicalize_equals_cc_path_on_empty_dictionary(spark, bc):
+    alias_dim = alias_dim_with_key(spark.createDataFrame([], ALIAS_DDL), bc)
+    rows = _assert_same_clusters(_hostile_linked(spark), alias_dim, bc)
+    assert rows and all(r[0] == r[1] and r[3] is None for r in rows)

@@ -135,8 +135,9 @@ def test_pipeline_hub_entity_skew(spark):
     assert max(r["n"] for r in partial) <= plain[hub_cid] * 0.5
 
     # linking + canonicalization complete and stay value-correct under
-    # the same skew (CC's internal min-neighbor is itself salted,
-    # canonicalize.py _min_neighbor)
+    # the same skew (canonicalization joins distinct surface keys to
+    # the dictionary's clusters, so the hub's rows never meet in one
+    # reducer)
     _, _, alias_df = corpus_dataframes(spark, 10)
     alias_dim = alias_dim_with_key(alias_df, bc)
     triples = extract_triples_fused(df, bc)

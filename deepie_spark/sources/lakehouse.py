@@ -9,12 +9,16 @@ parquet with an atomic version-pointer protocol:
     <root>/<table>/v=N/...parquet     (immutable version directories)
     <root>/<table>/_VERSION           (pointer file, atomic rename)
     <root>/_lineage/...parquet        (append-only stage lineage)
-    <root>/_lineage_parts/...parquet  (per-partition row counts + fingerprints)
+    <root>/_lineage_parts/...parquet  (per-file row counts)
+
+Lineage is observed in the write job (``DataFrame.observe``: rows + a
+content fingerprint); per-partition rows come from the parquet footers.
 
 Swapping to Iceberg on a real cluster changes only this module: every
 ``merge_upsert`` maps to one ``MERGE INTO``, every ``write_stage`` to an
 ``INSERT OVERWRITE``/snapshot commit, lineage to Iceberg snapshot
-metadata + a lineage table written in the same transaction.
+metadata (per-file rows are its data-file ``record_count``) + a lineage
+table written in the same transaction.
 
 The reference's analogue is its pickle example cache keyed by max_len
 (utils/file_util.py:11-38, main.py:79-93) — process-lifetime
@@ -32,7 +36,7 @@ import time
 import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_DDL = (
@@ -40,8 +44,7 @@ LINEAGE_DDL = (
     "n_partitions int, fingerprint bigint, wall_ms bigint, ts double"
 )
 LINEAGE_PARTS_DDL = (
-    "run_id string, stage string, version int, partition_id int, "
-    "rows bigint, fingerprint bigint"
+    "run_id string, stage string, version int, partition_id int, rows bigint"
 )
 
 
@@ -140,16 +143,11 @@ class Lakehouse:
 
     # ---- stage writes with lineage ----
 
-    def write_stage(
-        self,
-        df: DataFrame,
-        name: str,
-        run_id: str = "adhoc",
-        partition_by: list[str] | None = None,
-        with_part_lineage: bool = True,
-    ) -> int:
-        """Write a new version of a stage table + lineage rows.
-        Returns the committed version number."""
+    def write_stage(self, df: DataFrame, name: str, run_id: str = "adhoc") -> int:
+        """Write a new version of a stage table + lineage rows, observed
+        in the write job (no read-back).  Returns the committed version."""
+        import pyarrow.parquet as pq
+
         t0 = time.time()
         lay = self.layout(name)
         if lay and lay.get("bucketed"):
@@ -163,50 +161,43 @@ class Lakehouse:
         v = (self.current_version(name) or 0) + 1
         path = self._data_path(name, v)
         self._table_dir(name).mkdir(parents=True, exist_ok=True)
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(str(path))
 
-        out = self.spark.read.parquet(str(path))
         # fingerprint over scalar columns only: hashing array/map columns
         # (token arrays!) would double the stage cost at scale, and the
-        # scalar key+payload columns already pin row identity
+        # scalar key+payload columns already pin row identity.  One
+        # whole-table pmod, so the value does not depend on partitioning;
+        # decimal accumulation because ANSI mode (Spark 4 default) raises
+        # on bigint sum overflow, and hash sums will overflow
         cols = [
-            c for c, t in out.dtypes
+            c for c, t in df.dtypes
             if not t.startswith(("array", "map", "struct"))
-        ] or [out.columns[0]]
-        hashed = out.select(
-            F.spark_partition_id().alias("partition_id"),
-            F.xxhash64(*[F.col(c).cast("string") for c in cols]).alias("h"),
-        )
-        # decimal accumulation: ANSI mode (Spark 4 default) raises on
-        # bigint sum overflow, and hash sums will overflow
-        parts = hashed.groupBy("partition_id").agg(
+        ] or [df.columns[0]]
+        h = F.xxhash64(*[F.col(c).cast("string") for c in cols])
+        obs = Observation()
+        df.observe(
+            obs,
             F.count(F.lit(1)).alias("rows"),
-            F.pmod(
-                F.sum(F.col("h").cast("decimal(38,0)")), F.lit(2**62)
-            ).cast("long").alias("fingerprint"),
-        )
-        part_rows = parts.collect() if with_part_lineage else []
-        total_rows = sum(r["rows"] for r in part_rows) if part_rows else out.count()
-        fp = sum(r["fingerprint"] or 0 for r in part_rows) & (2**63 - 1)
+            F.pmod(F.sum(h.cast("decimal(38,0)")), F.lit(2**62))
+            .cast("long").alias("fingerprint"),
+        ).write.mode("overwrite").parquet(str(path))
+        m = obs.get
+        # per-file rows from the footers; the partition id is the writing
+        # task's, from Spark's part-NNNNN-... file name
+        files = [
+            (int(f.name.split("-")[1]), pq.read_metadata(f).num_rows)
+            for f in sorted(path.glob("part-*.parquet"))
+        ]
         wall_ms = int((time.time() - t0) * 1000)
 
         self._append_lineage(
             "_lineage", _LINEAGE_SCHEMA,
-            [(run_id, name, v, total_rows, len(part_rows), fp, wall_ms,
-              time.time())],
+            [(run_id, name, v, m["rows"], len(files), m["fingerprint"] or 0,
+              wall_ms, time.time())],
         )
-        if part_rows:
-            self._append_lineage(
-                "_lineage_parts", _LINEAGE_PARTS_SCHEMA,
-                [
-                    (run_id, name, v, int(r["partition_id"]), int(r["rows"]),
-                     int(r["fingerprint"] or 0))
-                    for r in part_rows
-                ],
-            )
+        self._append_lineage(
+            "_lineage_parts", _LINEAGE_PARTS_SCHEMA,
+            [(run_id, name, v, pid, rows) for pid, rows in files],
+        )
         self._commit(name, v)
         return v
 
@@ -218,17 +209,11 @@ class Lakehouse:
 
     def stage_done(self, name: str, run_id: str) -> bool:
         """Idempotent-resume check: stage committed by this run (or any
-        prior run) with a readable current version."""
-        if not self.exists(name):
-            return False
-        try:
-            lin = self.lineage()
-        except Exception:
-            return False
-        v = self.current_version(name)
-        return (
-            lin.where((F.col("stage") == name) & (F.col("version") == v)).count() > 0
-        )
+        prior run) with a readable current version.  The pointer alone,
+        no Spark job: both writers append the lineage row before
+        ``_commit`` swaps the pointer, so a committed, readable version
+        always has its lineage row."""
+        return self.exists(name)
 
     # ---- bucketed tables (co-located joins) ----
 
@@ -346,13 +331,15 @@ class Lakehouse:
             shutil.rmtree(new_path)
         tmp_path = tdir / f"v={v}.tmp-{uuid.uuid4().hex[:8]}"
 
+        # rows written (and, on the first write, the buckets) are
+        # observed in the write job itself, not read back
+        obs = Observation()
+        rows = F.count(F.lit(1)).alias("rows")
         if v_old is None:
-            updates.write.mode("overwrite").partitionBy("_kb").parquet(str(tmp_path))
-            written = self.spark.read.parquet(str(tmp_path))
-            rewritten = written.count()
-            touched = sorted(
-                r["_kb"] for r in written.select("_kb").distinct().collect()
-            )
+            updates.observe(
+                obs, rows, F.collect_set("_kb").alias("touched")
+            ).write.mode("overwrite").partitionBy("_kb").parquet(str(tmp_path))
+            touched = sorted(obs.get["touched"])
         else:
             old_path = self._data_path(name, v_old)
             touched = sorted(
@@ -377,11 +364,9 @@ class Lakehouse:
             )
             keep = cur.join(updates.select(*keys).distinct(), keys, "left_anti")
             merged = keep.unionByName(updates)
-            merged.write.mode("append").partitionBy("_kb").parquet(str(tmp_path))
-            rewritten = (
-                self.spark.read.parquet(str(tmp_path))
-                .where(F.col("_kb").isin(touched)).count()
-            )
+            merged.observe(obs, rows).write.mode("append").partitionBy(
+                "_kb").parquet(str(tmp_path))
+        rewritten = obs.get["rows"]
         os.replace(tmp_path, new_path)  # atomic: v=N appears fully-built
 
         wall_ms = int((time.time() - t0) * 1000)

@@ -1,7 +1,9 @@
 import pytest
 from pyspark.sql import functions as F
 
+from deepie_spark.plans.pipeline import KgPipeline
 from deepie_spark.sources.lakehouse import Lakehouse
+from deepie_spark.sources.synth import corpus_dataframes
 
 
 @pytest.fixture()
@@ -31,6 +33,105 @@ def test_stage_done_resume_check(spark, lake):
     assert not lake.stage_done("t3", "r1")
     lake.write_stage(spark.range(5), "t3", run_id="r1")
     assert lake.stage_done("t3", "r1")
+
+
+def _readback_fingerprint(df):
+    """Read-back oracle for the lineage fingerprint: xxhash64 over the
+    scalar columns cast to string, summed as decimal over the whole
+    table, pmod 2^62 (0 for an empty table)."""
+    cols = [
+        c for c, t in df.dtypes
+        if not t.startswith(("array", "map", "struct"))
+    ] or [df.columns[0]]
+    h = F.xxhash64(*[F.col(c).cast("string") for c in cols])
+    fp = df.agg(
+        F.pmod(F.sum(h.cast("decimal(38,0)")), F.lit(2**62)).cast("long")
+    ).first()[0]
+    return fp or 0
+
+
+def test_observed_lineage_matches_readback(spark, extractor, tmp_path):
+    """Every stage a pipeline run commits has a lineage row whose
+    observed rows and fingerprint equal a read-back of the committed
+    version, and per-file lineage rows that sum to those rows, one per
+    parquet file."""
+    pages_df, _, alias_df = corpus_dataframes(spark, 60)
+    pipe = KgPipeline(spark, str(tmp_path / "lake"), extractor, run_id="r1")
+    pipe.run(pages_df, alias_df)
+    lake = pipe.lake
+    lin = {(r["stage"], r["version"]): r for r in lake.lineage().collect()}
+    parts = lake.lineage_parts().collect()
+    stages = {
+        "texts", "tokens", "mentions", "triples", "linked",
+        "entity_clusters", "kg_triples", "kg_entities",
+    }
+    assert {s for s, _ in lin} == stages
+    for stage in stages:
+        v = lake.current_version(stage)
+        row = lin[(stage, v)]
+        out = lake.read(stage)
+        assert row["output_rows"] == out.count() > 0, stage
+        assert row["fingerprint"] == _readback_fingerprint(out), stage
+        files = list(lake._data_path(stage, v).glob("*.parquet"))
+        mine = [p for p in parts if p["stage"] == stage and p["version"] == v]
+        assert len(mine) == len(files) == row["n_partitions"], stage
+        assert sum(p["rows"] for p in mine) == row["output_rows"], stage
+
+
+def test_fingerprint_independent_of_partitioning(spark, lake):
+    rows = spark.range(500).select(
+        F.col("id"),
+        (F.col("id") % 13).cast("string").alias("s"),
+        F.array("id").alias("arr"),  # not hashed
+    )
+    lake.write_stage(rows.coalesce(1), "one", run_id="r1")
+    lake.write_stage(rows.repartition(7), "seven", run_id="r1")
+    lin = {r["stage"]: r for r in lake.lineage().collect()}
+    assert lin["one"]["n_partitions"] == 1 and lin["seven"]["n_partitions"] == 7
+    assert lin["one"]["fingerprint"] == lin["seven"]["fingerprint"] != 0
+    assert lin["one"]["fingerprint"] == _readback_fingerprint(rows)
+
+
+def test_stage_done_launches_no_spark_job(spark, lake):
+    lake.write_stage(spark.range(5), "t5", run_id="r1")
+    sc = spark.sparkContext
+    sc.setJobGroup("stage_done_probe", "stage_done")
+    try:
+        assert lake.stage_done("t5", "r1")
+        assert not lake.stage_done("absent", "r1")
+        assert sc.statusTracker().getJobIdsForGroup("stage_done_probe") == []
+        spark.range(3).count()  # control: a job in the group is seen
+        assert sc.statusTracker().getJobIdsForGroup("stage_done_probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_stage_done_false_on_crash_before_commit(spark, lake, monkeypatch):
+    """A crash between the lineage append and the pointer swap: the
+    lineage row and v=1 data exist, the pointer does not, so the stage
+    is not done and a retry commits v=1."""
+    def killed(*args, **kwargs):
+        raise RuntimeError("killed before the pointer swap")
+
+    monkeypatch.setattr(lake, "_commit", killed)
+    with pytest.raises(RuntimeError, match="pointer swap"):
+        lake.write_stage(spark.range(5), "t6", run_id="r1")
+    assert (lake._data_path("t6", 1) / "_SUCCESS").exists()
+    assert lake.lineage().filter("stage = 't6' and version = 1").count() == 1
+    assert lake.current_version("t6") is None
+    assert not lake.stage_done("t6", "r1")
+
+    monkeypatch.undo()
+    assert lake.write_stage(spark.range(5), "t6", run_id="r1") == 1
+    assert lake.stage_done("t6", "r1") and lake.read("t6").count() == 5
+
+
+def test_stage_done_false_without_success_marker(spark, lake):
+    lake.write_stage(spark.range(5), "t7", run_id="r1")
+    (lake._data_path("t7", 1) / "_SUCCESS").unlink()
+    assert lake.current_version("t7") == 1
+    assert not lake.stage_done("t7", "r1")
 
 
 def test_merge_upsert_semantics(spark, lake):

@@ -162,6 +162,18 @@ def _clear_rounds(state_dir: str) -> None:
         pass
 
 
+def _round0(edges: DataFrame) -> DataFrame:
+    """Every input edge once as (least, greatest), self-loops and null
+    endpoints kept: the round-0 cut and the node set's only source.
+    ``when``, not ``least``/``greatest`` (which skip nulls), so a null
+    endpoint stays a node of the output, as it is of the input."""
+    swap = F.col("src") > F.col("dst")
+    return edges.select(
+        F.when(swap, F.col("dst")).otherwise(F.col("src")).alias("src"),
+        F.when(swap, F.col("src")).otherwise(F.col("dst")).alias("dst"),
+    ).distinct()
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 25,
@@ -170,6 +182,14 @@ def connected_components(
 ) -> DataFrame:
     """edges(src bigint, dst bigint) -> (node bigint, component bigint)
     where component = min node id of the cluster.
+
+    ``edges`` is evaluated once: the round-0 cut holds every input edge
+    once as (least, greatest), self-loops included; the node set is
+    read from that cut, and round 1 starts from it minus the self-loops.
+    A node whose only edge is a self-loop is its own component.  (A
+    node set read from the raw ``edges`` would make the final action
+    re-run the whole upstream chain — for ``dedup_clusters``, LSH and
+    Jaccard verification — once per side of the src/dst union.)
 
     Lineage/fault-tolerance modes for the per-round cut (each CC round
     builds joins on the previous round's output; without a cut the plan
@@ -187,10 +207,17 @@ def connected_components(
       read back — survives full DRIVER loss: a rerun with the same
       ``state_dir`` resumes from the last completed round instead of
       restarting (kill-one-round test in test_canonicalize.py).
-      Resume is input-guarded: round 0 records a fingerprint of the
-      canonicalized input edges, and a rerun whose edges changed (same
-      state_dir, new graph) wipes the snapshots and restarts instead
-      of silently resuming the old graph.
+      ``round_0000`` is the round-0 cut above, and a resumed run reads
+      its node set from it.  Resume is input-guarded: round 0 records a
+      fingerprint of that cut, and a resume recomputes it from
+      ``edges`` (one aggregation over the input); a rerun whose edges
+      changed (same state_dir, new graph) wipes the snapshots and
+      restarts instead of silently resuming the old graph.  A state
+      dir whose round 0 dropped self-loops (written before round 0 kept
+      them) restarts on an input with a self-loop or a null endpoint,
+      since its fingerprint mismatches; on any other input its
+      ``round_0000`` holds the same rows as the cut, so resuming it is
+      safe.
       Takes precedence over ``checkpoint_dir``.
 
     All three modes produce identical components (tested)."""
@@ -213,27 +240,29 @@ def connected_components(
         # that reuses state_dir after the upstream edge set changed
         # must restart, or it silently resumes round snapshots of the
         # OLD graph and emits components for edges that no longer
-        # exist.  Round 0 records _fingerprint(canonicalized input);
-        # a resume recomputes it (one aggregation over the input — the
-        # price of not trusting the directory name) and restarts on
-        # mismatch or when no fingerprint was recorded.
+        # exist.  Round 0 records the fingerprint of its cut; a resume
+        # recomputes it from the input (one aggregation — the price of
+        # not trusting the directory name) and restarts on mismatch or
+        # when no fingerprint was recorded.
         stored = _read_input_fp(state_dir)
-        if stored is None or stored != _fingerprint(_canon_edges(edges)):
+        if stored is None or stored != _fingerprint(_round0(edges)):
             _clear_rounds(state_dir)
             last = -1
     if last >= 0:
-        e = spark.read.parquet(f"{state_dir}/round_{last:04d}")
+        r0 = spark.read.parquet(f"{state_dir}/round_0000")
         start = last + 1
-        prev = _fingerprint(e)
     else:
-        e = cut(_canon_edges(edges), 0)
+        r0 = cut(_round0(edges), 0)
         start = 1
-        # fingerprint of the cut == fingerprint of the canonical input
-        # (same rows, order-independent sum), so the fresh path records
-        # the input fingerprint with zero extra jobs
-        prev = _fingerprint(e)
         if state_dir is not None:
-            _write_input_fp(state_dir, prev)
+            # fingerprint of the cut == fingerprint of _round0(edges)
+            # (same rows, order-independent sum)
+            _write_input_fp(state_dir, _fingerprint(r0))
+    if start == 1:
+        e = r0.where(F.col("src") != F.col("dst"))
+    else:
+        e = spark.read.parquet(f"{state_dir}/round_{last:04d}")
+    prev = _fingerprint(e)
     for rnd in range(start, start + max_iter):
         e = cut(_canon_edges(_small_star(_large_star(e))), rnd)
         cur = _fingerprint(e)
@@ -241,8 +270,8 @@ def connected_components(
             break
         prev = cur
     nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
+        r0.select(F.col("src").alias("node"))
+        .union(r0.select(F.col("dst").alias("node")))
         .distinct()
     )
     # edges are kept in canonical (src < dst) form, so at convergence

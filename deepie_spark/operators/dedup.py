@@ -324,6 +324,13 @@ def ngram_jaccard_pairs(
 ) -> DataFrame:
     """Word n-gram Jaccard similarity pairs >= threshold.
 
+    Each document's text is lowercased and split once, into its own
+    column, and the grams are built from that column.  (Referenced
+    inside the ``transform`` lambda, the split is inlined by Catalyst
+    and the executed plan re-splits the whole text for every gram:
+    O(words^2) per document.)  Both physical plans below share this
+    step.
+
     Two physical plans, picked by whether a candidate set is given:
 
     **With ``candidates`` (the 100-TB verify path)** — pair-local: join
@@ -337,36 +344,59 @@ def ngram_jaccard_pairs(
     candidates — Catalyst can push the semi join below the aggregate
     but NOT below the self-join (the condition references both sides),
     so one stop-word bigram still went quadratic over the corpus.
+
+    Before the intersect, pairs are length-filtered on the gram-array
+    sizes carried from the build side: ``least(|A|,|B|) /
+    greatest(|A|,|B|) >= threshold`` (the exact length filter of
+    set-similarity joins).  It drops no pair that passes:
+    J(A,B) = |A∩B| / |A∪B| <= min(|A|,|B|) / max(|A|,|B|), and
+    correctly rounded division is monotone, so the double ratio is at
+    least the double Jaccard.  Every gram array has at least one gram
+    (a null or empty text has one empty gram), so at ``threshold <= 0``
+    it keeps every pair.
     Note: with threshold == 0 this path emits candidate pairs with
     jaccard 0 (no shared gram), which the self-join path cannot
     produce; every real threshold (> 0) makes the two plans identical.
 
     **Without ``candidates``** — the classic relational form: explode
-    distinct n-grams, self-join on the gram, count intersections.
+    distinct n-grams (each row carrying its doc's gram count, so no
+    size lookup joins), self-join on the gram, count intersections.
     Only safe when the corpus is small or grams are near-unique; at
     scale always feed LSH candidates."""
-    toks = F.split(F.lower(F.col(text_col)), " ")
+    toks = F.col("_toks")
     grams = F.array_distinct(
         F.transform(
             F.sequence(F.lit(1), F.greatest(F.size(toks) - F.lit(n - 1), F.lit(1))),
             lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
         )
     )
-    g = docs.select(F.col(id_col).alias("id"), grams.alias("grams"))
+    g = docs.select(
+        F.col(id_col).alias("id"),
+        F.split(F.lower(F.col(text_col)), " ").alias("_toks"),
+    ).select("id", grams.alias("grams"))
 
     if candidates is not None:
-        ga = g.select(F.col("id").alias("a"), F.col("grams").alias("_ga"))
-        gb = g.select(F.col("id").alias("b"), F.col("grams").alias("_gb"))
+        ga = g.select(
+            F.col("id").alias("a"), F.col("grams").alias("_ga"),
+            F.size("grams").alias("_sza"),
+        )
+        gb = g.select(
+            F.col("id").alias("b"), F.col("grams").alias("_gb"),
+            F.size("grams").alias("_szb"),
+        )
         return (
             candidates.select("a", "b")
             .join(ga, "a")
             .join(gb, "b")
+            .where(
+                F.least("_sza", "_szb") / F.greatest("_sza", "_szb") >= threshold
+            )
             .select(
                 "a",
                 "b",
                 F.size(F.array_intersect("_ga", "_gb")).alias("_inter"),
-                F.size("_ga").alias("_sza"),
-                F.size("_gb").alias("_szb"),
+                "_sza",
+                "_szb",
             )
             .select(
                 "a",
@@ -379,25 +409,28 @@ def ngram_jaccard_pairs(
             .where(F.col("jaccard") >= threshold)
         )
 
-    sizes = g.select("id", F.size("grams").alias("sz"))
-    ex = g.select("id", F.explode("grams").alias("gram"))
-    pairs = (
-        ex.alias("x")
-        .join(ex.alias("y"), "gram")
-        .where(F.col("x.id") < F.col("y.id"))
-        .groupBy(F.col("x.id").alias("a"), F.col("y.id").alias("b"))
-        .agg(F.count(F.lit(1)).alias("inter"))
+    # explode_outer: grams is never null or empty (a null or empty text
+    # has one empty gram), so it emits the same rows as explode, but it
+    # infers no size(grams) > 0 filter, which Catalyst would push below
+    # the token projection with the split inlined into the lambda again
+    ex = g.select(
+        "id", F.size("grams").alias("sz"), F.explode_outer("grams").alias("gram")
     )
-    sa = sizes.select(F.col("id").alias("a"), F.col("sz").alias("sza"))
-    sb = sizes.select(F.col("id").alias("b"), F.col("sz").alias("szb"))
+    x = ex.select(F.col("id").alias("a"), F.col("sz").alias("sza"), "gram")
+    y = ex.select(F.col("id").alias("b"), F.col("sz").alias("szb"), "gram")
     return (
-        pairs.join(sa, "a").join(sb, "b")
-        .withColumn(
-            "jaccard",
-            F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter")),
+        x.join(y, "gram")
+        .where(F.col("a") < F.col("b"))
+        .groupBy("a", "b", "sza", "szb")
+        .agg(F.count(F.lit(1)).alias("inter"))
+        .select(
+            "a",
+            "b",
+            (
+                F.col("inter") / (F.col("sza") + F.col("szb") - F.col("inter"))
+            ).alias("jaccard"),
         )
         .where(F.col("jaccard") >= threshold)
-        .select("a", "b", "jaccard")
     )
 
 
@@ -549,7 +582,15 @@ def dedup_clusters(
     avg_grams_per_doc).  There is no gram-level self-join anywhere in
     this pipeline, so a stop-word bigram shared by the whole corpus
     cannot create a quadratic join group (see ``ngram_jaccard_pairs``
-    for the plan-level argument and the adversarial hot-gram test)."""
+    for the plan-level argument and the adversarial hot-gram test).
+    Each document's text is split once, and candidate pairs whose gram
+    counts cannot reach ``verify_threshold`` are length-filtered before
+    the intersect (an exact filter: no verified pair is lost).
+
+    Each intermediate is evaluated once: ``connected_components`` reads
+    the verified edges into its round-0 cut and takes the node set from
+    there, so the final plan re-runs neither the signature kernel nor
+    the verify (pinned in ``test_plans.py``)."""
     from deepie_spark.operators.canonicalize import connected_components
 
     pairs = lsh_dedup_pairs(

@@ -21,6 +21,22 @@ sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 import __spark_entry__ as entrymod  # noqa: E402
 
 
+def _dedup_clusters_verify(spark, sf_dir):
+    """dedup_clusters' LSH + Jaccard verify step, built as q_dedup_clusters
+    builds it: the final dedup_clusters plan starts after
+    connected_components has cut the verified edges, so it does not show
+    this step."""
+    from deepie_spark.operators.dedup import lsh_dedup_pairs, ngram_jaccard_pairs
+
+    docs = entrymod._docs(spark, sf_dir)
+    pairs = lsh_dedup_pairs(docs, n_hashes=8, shingle_k=5, n_bands=4, max_bucket=256)
+    return ngram_jaccard_pairs(docs, n=2, threshold=0.8, candidates=pairs)
+
+
+# sub-plans of declared queries that their own plan does not show
+STEPS = {"dedup_clusters_verify": _dedup_clusters_verify}
+
+
 def main() -> None:
     out_dir = Path(sys.argv[1])
     sf_dir = sys.argv[2] if len(sys.argv) > 2 else "/root/testdata/sf0.1"
@@ -31,7 +47,7 @@ def main() -> None:
 
     spark = get_spark(app_name="plan_dump")
     suffix = os.environ.get("DEEPIE_PLAN_SUFFIX", "")
-    for name, fn in entrymod.queries().items():
+    for name, fn in {**entrymod.queries(), **STEPS}.items():
         if only and name not in only:
             continue
         try:

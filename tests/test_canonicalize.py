@@ -107,6 +107,41 @@ def test_cc_three_lineage_modes_identical(spark, tmp_path):
     assert any(os.scandir(tmp_path / "ckpt"))
 
 
+def test_cc_reads_edges_once_in_every_lineage_mode(spark, tmp_path):
+    """The input edges are evaluated once: the round-0 cut holds them,
+    and the node set is read from the cut, not from the raw edges
+    (which would re-run the whole upstream chain — LSH and Jaccard
+    verify in dedup_clusters — once per side of a src/dst union).  A
+    row-counting accumulator in a mapInPandas upstream of the edges
+    sees each input row exactly once per call.  The graph has a
+    self-loop-only node (7) and a duplicated, reversed edge; every mode
+    matches union-find."""
+    rng = random.Random(5)
+    nodes = list(range(10, 60))
+    edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(60)]
+    edges += [(7, 7), (1, 2), (2, 1), (2, 1), (2, 3)]
+    want = _cc_oracle(edges)
+    assert want[7] == 7
+    src = spark.createDataFrame(edges, "src bigint, dst bigint").repartition(3)
+
+    for mode in ({}, {"checkpoint_dir": str(tmp_path / "ckpt")},
+                 {"state_dir": str(tmp_path / "state")}):
+        seen = spark.sparkContext.accumulator(0)
+
+        def counted(it, seen=seen):
+            for pdf in it:
+                seen.add(len(pdf))
+                yield pdf
+
+        df = src.mapInPandas(counted, "src bigint, dst bigint")
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components(df, **mode).collect()
+        }
+        assert got == want, mode
+        assert seen.value == len(edges), mode
+
+
 def test_cc_kill_one_round_resume(spark, tmp_path):
     """Driver-loss resume: a run killed after one CC round (simulated
     with max_iter=1 + state_dir) leaves _SUCCESS-complete round

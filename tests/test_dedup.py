@@ -278,6 +278,79 @@ def test_jaccard_hot_gram_stays_linear_in_candidates(spark):
     assert len(got) == 3  # nothing outside the candidate set
 
 
+def _words(prefix, lo, hi):
+    return " ".join(f"{prefix}{i}" for i in range(lo, hi))
+
+
+# bigram counts in the comments; "shared" = bigrams in common
+LENGTH_DOCS = [
+    (0, _words("w", 0, 5)),                            # 4
+    (1, _words("w", 0, 6)),                            # 5 ⊃ doc 0: J = ratio = 0.8
+    (2, _words("w", 0, 40)),                           # 39
+    (3, _words("w", 0, 50)),                           # 49 ⊃ doc 2: ratio 39/49 < 0.8
+    (4, _words("w", 0, 36) + " " + _words("x", 0, 5)),  # 40, 35 shared with 2: J = 35/44
+    (5, _words("w", 0, 10)),                           # 9
+    (6, _words("w", 0, 9) + " x"),                     # 9, 8 shared with 5: J = 0.8
+    (7, None),
+    (8, None),
+    (9, ""),
+    (10, "one"),
+    (11, "ONE"),
+]
+
+
+def _twin_jaccard(ta, tb, n=2):
+    """Python set-Jaccard twin of ngram_jaccard_pairs (a null text
+    splits like the empty string: one empty gram)."""
+
+    def grams(t):
+        ws = (t or "").lower().split(" ")
+        return set(" ".join(ws[i : i + n]) for i in range(max(len(ws) - n + 1, 1)))
+
+    ga, gb = grams(ta), grams(tb)
+    return len(ga & gb) / len(ga | gb)
+
+
+def test_jaccard_length_filter_boundary(spark):
+    """The length filter (least/greatest gram count >= threshold, ahead
+    of array_intersect) drops no pair that passes: pairs at exactly
+    J = 0.8 (A ⊂ B with 4 and 5 grams, and equal sizes with 8 of 9
+    shared), a size ratio just under the threshold, J just under it,
+    null/empty/one-word texts, and threshold 0, where jaccard-0
+    candidates are still emitted."""
+    docs = spark.createDataFrame(LENGTH_DOCS, "doc_id bigint, text string")
+    text = dict(LENGTH_DOCS)
+    ids = sorted(text)
+    cands = spark.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "a bigint, b bigint"
+    )
+    twin = {(a, b): _twin_jaccard(text[a], text[b]) for a in ids for b in ids if a < b}
+
+    df = D.ngram_jaccard_pairs(docs, n=2, threshold=0.8, candidates=cands)
+    got = {(r["a"], r["b"]): r["jaccard"] for r in df.collect()}
+    assert got == {k: j for k, j in twin.items() if j >= 0.8}
+    assert got[(0, 1)] == 0.8 and got[(5, 6)] == 0.8
+    assert (2, 3) not in got and (2, 4) not in got
+    assert twin[(2, 3)] == 39 / 49 and twin[(2, 4)] == 35 / 44
+    assert got[(7, 8)] == got[(7, 9)] == got[(8, 9)] == got[(10, 11)] == 1.0
+
+    zero = D.ngram_jaccard_pairs(docs, n=2, threshold=0.0, candidates=cands)
+    got0 = {(r["a"], r["b"]): r["jaccard"] for r in zero.collect()}
+    assert got0 == twin
+    assert got0[(0, 10)] == 0.0 and got0[(7, 10)] == 0.0
+
+    # the length predicate is the join condition's first conjunct, so
+    # array_intersect runs only on pairs that pass it
+    plan = df._jdf.queryExecution().explainString(
+        spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
+    )
+    cond = next(
+        line for line in plan.splitlines()
+        if line.startswith("Join condition") and "array_intersect" in line
+    )
+    assert -1 < cond.find("least(") < cond.find("array_intersect")
+
+
 def test_simhash_near_pairs_complete_vs_brute(spark):
     """Pigeonhole completeness: EVERY pair within hamming <= 3 of the
     16-bit simhash must be found (a pair differing in <= 3 bits leaves

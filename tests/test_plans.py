@@ -183,13 +183,29 @@ def test_neural_ner_no_key_shuffle_and_pruned(spark):
 
 def test_jaccard_verify_stage_no_generate(spark):
     """dedup_clusters' verify stage: candidates-given Jaccard is
-    pair-local — the full dedup plan may explode band ids (LSH), but
-    the verify sub-plan built on candidates contains no Generate and
-    no gram-keyed join (see test_dedup for the operator-level test);
-    here we pin that the end-to-end dedup_clusters plan has no
-    CartesianProduct and at most the expected exchange count."""
-    df = em.q_dedup_clusters(spark, SF)
-    p = plan_of(df)
+    pair-local — the verify plan may explode band ids (LSH), but the
+    Jaccard step built on the candidates has no gram-keyed join (see
+    test_dedup for the operator-level test).  Here we pin that the
+    verify step, built the way dedup_clusters builds it, really runs
+    array_intersect with no CartesianProduct; and that the final
+    dedup_clusters plan re-runs neither the signature kernel nor the
+    verify: connected_components reads its edges once, into its
+    round-0 cut, so the final plan reads only the cut."""
+    from deepie_spark.operators.dedup import lsh_dedup_pairs, ngram_jaccard_pairs
+
+    docs = em._docs(spark, SF)
+    pairs = lsh_dedup_pairs(
+        docs, n_hashes=8, shingle_k=5, n_bands=4, max_bucket=256
+    )
+    verify = plan_of(
+        ngram_jaccard_pairs(docs, n=2, threshold=0.8, candidates=pairs)
+    )
+    assert "CartesianProduct" not in verify
+    assert "BroadcastNestedLoopJoin" not in verify
+    assert "array_intersect" in verify  # the pair-local verify really runs
+
+    p = plan_of(em.q_dedup_clusters(spark, SF))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
-    assert "array_intersect" in p  # the pair-local verify really runs
+    assert "MapInPandas" not in p  # no signature recompute
+    assert "array_intersect" not in p  # no verify recompute

@@ -905,19 +905,17 @@ def q_neural_ner(spark, sf_dir):
 
 
 def q_mentions_trie(spark, sf_dir):
-    """The REAL mention operator (broadcast-trie longest-nonoverlap
-    matching inside the token stage) — hash-checked against the
-    materialized single-row trie oracle.  `mention_candidates` remains
-    as the cross-engine substring-arithmetic twin."""
+    """The REAL mention operator (one mapInPandas over the pages' text:
+    tokenize, then broadcast-trie longest-nonoverlap matching) —
+    hash-checked against the materialized single-row trie oracle.
+    `mention_candidates` remains as the cross-engine substring-arithmetic
+    twin."""
     _ensure(spark)
-    from deepie_spark.operators.extract import stage_tokens
     from deepie_spark.operators.linking import detect_mentions
     from deepie_spark.sources.synth import corpus_dataframes
 
     pages_df, _, _ = corpus_dataframes(spark, _pages_count(sf_dir))
-    bc = _extractor_bc(spark)
-    tokens = stage_tokens(pages_df.select("url", "lang", "text"), bc)
-    return detect_mentions(tokens, bc)
+    return detect_mentions(pages_df, _extractor_bc(spark))
 
 
 # --------------------------------------------------------------------------
@@ -1009,8 +1007,7 @@ def _expected_mentions(sf_dir):
             "entity_type", "weight"]
     rows = []
     for p in pages:
-        context, tokens, starts, ends = ex.tokenize_page(p["text"])
-        for r in page_mentions_py(ex, p["url"], context, tokens, starts, ends):
+        for r in page_mentions_py(ex, p["url"], p["text"]):
             rows.append(dict(zip(cols, r)))
     return pa.Table.from_pylist(
         rows,

@@ -498,8 +498,8 @@ def run_scaling(
 
 def run_skew_bench(spark, sf_dir: str) -> dict:
     """Hub-entity skew at bench scale (round-4 verdict #7): the same
-    tokens -> mentions -> salted counts -> extract -> link ->
-    canonicalize chain over two corpora of IDENTICAL size — one where a
+    mentions -> salted counts -> extract -> link -> canonicalize
+    chain over two corpora of IDENTICAL size — one where a
     single entity's page is replicated until it carries ~30% of all
     mentions (a celebrity on a web crawl), one where the same number of
     replicas spread uniformly over distinct pages.  Records both walls
@@ -510,11 +510,7 @@ def run_skew_bench(spark, sf_dir: str) -> dict:
     ratio grows with the replica count)."""
     from deepie_spark.config.schema import SYNTH_SCHEMA
     from deepie_spark.operators.canonicalize import canonicalize_entities
-    from deepie_spark.operators.extract import (
-        PageExtractor,
-        extract_triples_fused,
-        stage_tokens,
-    )
+    from deepie_spark.operators.extract import PageExtractor, extract_triples_fused
     from deepie_spark.operators.linking import (
         alias_dim_with_key,
         detect_mentions,
@@ -540,8 +536,7 @@ def run_skew_bench(spark, sf_dir: str) -> dict:
     # cheaper per replica and flatter the ratio)
     rich = []
     for p in pages:
-        ctx, toks, st_, en_ = ex.tokenize_page(p["text"])
-        if len(page_mentions_py(ex, p["url"], ctx, toks, st_, en_)) >= 2:
+        if len(page_mentions_py(ex, p["url"], p["text"])) >= 2:
             rich.append(p)
         if len(rich) >= 200:
             break  # bounded driver-side scan
@@ -566,15 +561,14 @@ def run_skew_bench(spark, sf_dir: str) -> dict:
         ).repartition(CPUS).cache()
         df.count()  # materialize input outside the timed window
         t0 = time.time()
-        tokens = stage_tokens(df, bc)
-        mentions = detect_mentions(tokens, bc)
+        mentions = detect_mentions(df, bc)
         salted_count(mentions, ["canonical_id"]).write.format("noop").mode(
             "overwrite"
         ).save()
         linked = link_triples(extract_triples_fused(df, bc), alias_dim, bc)
-        canonicalize_entities(linked, alias_dim, bc).write.format(
-            "noop"
-        ).mode("overwrite").save()
+        canonicalize_entities(linked, alias_dim).write.format("noop").mode(
+            "overwrite"
+        ).save()
         sec = time.time() - t0
         df.unpersist()
         return round(sec, 3)
@@ -592,8 +586,8 @@ def run_skew_bench(spark, sf_dir: str) -> dict:
 
 
 def run_kg_pipeline(spark, sf_dir: str) -> float:
-    """Full checkpointed KG pipeline (pages -> texts/tokens -> triples
-    -> mentions -> linked -> canonical clusters -> MERGE into kg_*
+    """Full checkpointed KG pipeline (pages -> texts -> mentions ->
+    triples -> linked -> canonical clusters -> MERGE into kg_*
     lakehouse tables) end-to-end into a fresh lake.  Single cold trial
     by design: the pipeline is the materialization path, and its cost
     is dominated by real stage work + stage-table writes."""

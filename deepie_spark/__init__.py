@@ -5,10 +5,11 @@ DeepIE reference (loujie0822/DeepIE).
 Pipeline (DataFrame passes, each a checkpointed lakehouse stage):
 
     pages -> texts -> triples -> linked -> entity_clusters -> kg (MERGE)
-               \\-> tokens -> mentions
+               \\-> mentions
 
 ``triples`` runs the whole extraction cascade (subject grid ->
-per-subject object grid -> assemble) in one fused, page-local pass.
+per-subject object grid -> assemble) in one fused, page-local pass;
+``mentions`` tokenizes and trie-matches each page in one pass too.
 
 Everything is DataFrame/Catalyst-first; Python appears only inside
 Arrow-batched pandas UDFs (never per-row Python), per the build contract.

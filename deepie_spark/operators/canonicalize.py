@@ -7,11 +7,13 @@ over a salted entity-similarity graph".
 Entity clusters (``canonicalize_entities``): nodes are normalized
 surface keys hashed to int64.  Two aliases of one canonical_id share
 a cluster, so an alias shared by two entities merges theirs; a surface
-joins a cluster by equal normalized key (same node id).  Triples add
-no edges, so the graph is the alias dictionary the extractor already
-broadcasts whole: ``alias_components`` solves it by a driver-side
-union-find over one small collect, and one broadcast join applies it
-(no fixpoint, no shuffle of the triple side).
+joins a cluster by equal normalized key (same node id).  The keys are
+the ones ``link_triples`` already computed and kept as columns of
+``linked``, so canonicalization runs no Python over triple rows.
+Triples add no edges, so the graph is the alias dictionary the
+extractor already broadcasts whole: ``alias_components`` solves it by a
+driver-side union-find over one small collect, and one broadcast join
+applies it (no fixpoint, no shuffle of the triple side).
 
 General operator (``connected_components``, for data-sized graphs:
 ``dedup_clusters`` and the CC query).  Alternating large-star /
@@ -328,17 +330,19 @@ def alias_components(alias_dim: DataFrame) -> DataFrame:
 
 
 def canonicalize_entities(
-    linked_triples: DataFrame, alias_dim: DataFrame, extractor_bc
+    linked_triples: DataFrame, alias_dim: DataFrame
 ) -> DataFrame:
     """(component, node, norm_key, cluster_canonical_id) for every
-    distinct subject/object surface; a surface matching no alias is its
-    own cluster (component = node, cluster_canonical_id null)."""
-    from deepie_spark.operators.linking import norm_key_udf
+    distinct subject/object surface of ``link_triples``' output, read
+    from its normalized key columns (no Python over triple rows); a
+    surface matching no alias is its own cluster (component = node,
+    cluster_canonical_id null)."""
+    from deepie_spark.operators.linking import NORM_KEY_COLS
 
-    norm = norm_key_udf(extractor_bc)
+    subject_key, object_key = NORM_KEY_COLS
     surfaces = (
-        linked_triples.select(norm("subject").alias("norm_key"))
-        .union(linked_triples.select(norm(F.col("object")["@value"]).alias("norm_key")))
+        linked_triples.select(F.col(subject_key).alias("norm_key"))
+        .union(linked_triples.select(F.col(object_key).alias("norm_key")))
         .where(F.col("norm_key").isNotNull())
         .distinct()
     )

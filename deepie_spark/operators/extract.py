@@ -8,8 +8,9 @@ batching wants it (multi_pointer_net.py:96-123); on Spark the fan-out
 is page-local and free.  ``KgPipeline``'s ``triples`` stage runs it
 over the committed ``texts`` table.
 
-``stage_texts`` / ``stage_tokens`` are the pipeline's ``texts`` and
-``tokens`` stage kernels (``tokens`` feeds mention detection).  Each
+``stage_texts`` is the pipeline's ``texts`` stage kernel; every
+kernel that needs tokens (extraction, mention detection, gold spans)
+tokenizes its own pages with ``PageExtractor.tokenize_page``.  Each
 page's triples must equal the single-row oracle ``extract_page_py`` —
 byte-identical per url, independent of Arrow batch boundaries.
 """
@@ -40,10 +41,6 @@ from deepie_spark.operators.decode import (
 TRIPLES_DDL = (
     "url string, subject string, subject_type string, predicate string, "
     "object map<string,string>, object_type map<string,string>"
-)
-TOKENS_DDL = (
-    "url string, lang string, context string, tokens array<string>, "
-    "tok_start array<int>, tok_end array<int>"
 )
 
 
@@ -231,7 +228,7 @@ def extract_triples_fused_dedup(pages_df, extractor_bc, text_col: str = "text"):
     )
 
 
-# ---- pipeline stage kernels ------------------------------------------------
+# ---- pipeline texts stage --------------------------------------------------
 
 
 def stage_texts(pages_df):
@@ -252,29 +249,6 @@ def stage_texts(pages_df):
     return pages_df.select("url", "lang", "html").mapInPandas(
         kernel, "url string, lang string, text string"
     )
-
-
-def stage_tokens(texts_df, extractor_bc):
-    """texts -> (url, lang, context, tokens, tok_start, tok_end)."""
-
-    def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        ex: PageExtractor = extractor_bc.value
-        for pdf in it:
-            out = {
-                "url": [], "lang": [], "context": [], "tokens": [],
-                "tok_start": [], "tok_end": [],
-            }
-            for url, lang, text in zip(pdf["url"], pdf["lang"], pdf["text"]):
-                context, tokens, starts, ends = ex.tokenize_page(text)
-                out["url"].append(url)
-                out["lang"].append(lang)
-                out["context"].append(context)
-                out["tokens"].append(tokens)
-                out["tok_start"].append(starts)
-                out["tok_end"].append(ends)
-            yield pd.DataFrame(out)
-
-    return texts_df.mapInPandas(kernel, TOKENS_DDL)
 
 
 # ---- encoder grid verification ------------------------------------------------

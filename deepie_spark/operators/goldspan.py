@@ -12,11 +12,12 @@ Exact ports of the reference's label-building primitives:
     check) — the detail that keeps self-referential sentences from
     producing degenerate labels.
 
-Distributed shape: gold triples join the tokenized page stage on url
+Distributed shape: gold triples join the (url, text) pages on url
 (broadcast when the gold side is dimension-sized, shuffle hash join
 otherwise — both sides are hash-partitioned on url so the join
 co-locates with the downstream per-url label pack), then one
-``mapInPandas`` pass runs the searches page-locally.
+``mapInPandas`` pass tokenizes each page and runs the searches
+page-locally.
 """
 
 from __future__ import annotations
@@ -91,23 +92,23 @@ def search_spo_index(
 
 
 def gold_spans(
-    tokens_df: DataFrame,
+    texts_df: DataFrame,
     gold_df: DataFrame,
     extractor_bc,
     broadcast_gold: bool = False,
 ) -> DataFrame:
-    """Tokenized pages x gold triples -> placed token spans.
+    """Pages x gold triples -> placed token spans.
 
-    ``tokens_df``: the token stage (url, tokens, ...); ``gold_df``:
-    (url, subject, predicate, object_value).  At crawl scale gold is a
-    fact table — the url-equi-join shuffles both sides on url (set
-    ``broadcast_gold=True`` only for dimension-sized gold).  Surfaces
-    are tokenized inside the kernel with the SAME tokenizer as pages,
-    so token-space equality is exact."""
+    ``texts_df``: (url, text) pages; ``gold_df``: (url, subject,
+    predicate, object_value).  At crawl scale gold is a fact table — the
+    url-equi-join shuffles both sides on url (set
+    ``broadcast_gold=True`` only for dimension-sized gold).  Pages are
+    tokenized inside the kernel with ``tokenize_page``, and surfaces with
+    the SAME tokenizer, so token-space equality is exact."""
     gold = gold_df.select("url", "subject", "predicate", "object_value")
     if broadcast_gold:
         gold = F.broadcast(gold)
-    joined = tokens_df.select("url", "tokens").join(gold, "url")
+    joined = texts_df.select("url", "text").join(gold, "url")
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ex = extractor_bc.value
@@ -125,7 +126,7 @@ def gold_spans(
         for pdf in it:
             rows = []
             for r in pdf.itertuples(index=False):
-                toks = list(r.tokens)
+                toks = ex.tokenize_page(r.text)[1]
                 st = toks_of(r.subject)
                 ot = toks_of(r.object_value)
                 s_at, o_at = search_spo_index(toks, st, ot)

@@ -10,9 +10,11 @@ alias dimension, ranked by alias weight then canonical_id — a
 broadcast join, no UDF on the scoring side.
 
 Scale notes: the alias dimension is small (millions of rows at most)
--> broadcast; the mention stream is huge -> never shuffled here (the
-trie runs inside the token-stage mapInPandas); the link join is
-broadcast so it adds no shuffle either.
+-> broadcast; the mention stream is huge -> never shuffled here (each
+page is tokenized and trie-matched in one mapInPandas over ``texts``);
+the link join is broadcast so it adds no shuffle either.  Linking keeps
+each surface's normalized key as a column of its output, so
+canonicalization reads it instead of normalizing the surface again.
 """
 
 from __future__ import annotations
@@ -27,16 +29,18 @@ MENTIONS_DDL = (
     "url string, mention string, tok_start int, tok_end int, "
     "canonical_id bigint, entity_type string, weight double"
 )
+# the normalized surface keys link_triples keeps on its output
+# (``<surface column>_norm_key``), read by canonicalize_entities
+NORM_KEY_COLS = ("subject_norm_key", "object_value_norm_key")
 
 
-def page_mentions_py(
-    ex, url: str, context: str, tokens: list[str],
-    starts: list[int], ends: list[int],
-) -> list[tuple]:
-    """Single-row mention oracle: longest-nonoverlapping trie matches
-    with all candidate entities per span.  Shared verbatim by the
-    distributed kernel and the driver-side fixture oracle, so the
-    hash-check verifies the Spark plumbing against this exact code."""
+def page_mentions_py(ex, url: str, text: str) -> list[tuple]:
+    """Single-row mention oracle: tokenize the page, then
+    longest-nonoverlapping trie matches with all candidate entities per
+    span.  Shared verbatim by the distributed kernel and the driver-side
+    fixture oracle, so the hash-check verifies the Spark plumbing
+    against this exact code."""
+    context, tokens, starts, ends = ex.tokenize_page(text)
     rows = []
     for s, e, _entry in ex.trie.match_longest_nonoverlap(tokens):
         surface = context[starts[s] : ends[e - 1] + 1]
@@ -51,12 +55,13 @@ def page_mentions_py(
     return rows
 
 
-def detect_mentions(tokens_df: DataFrame, extractor_bc) -> DataFrame:
-    """tokens stage -> one row per longest-nonoverlapping alias match.
+def detect_mentions(texts_df: DataFrame, extractor_bc) -> DataFrame:
+    """(url, text) pages -> one row per longest-nonoverlapping alias match.
 
     Emits (url, mention surface, token span, candidate canonical_id,
     entity_type, weight); a surface with k candidate entities emits k
-    rows (link scoring picks one downstream).
+    rows (link scoring picks one downstream).  One pass: each page is
+    tokenized inside the kernel, so no token table is materialized.
     """
 
     def kernel(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -65,17 +70,11 @@ def detect_mentions(tokens_df: DataFrame, extractor_bc) -> DataFrame:
                 "entity_type", "weight"]
         for pdf in it:
             rows = []
-            for r in pdf.itertuples(index=False):
-                rows.extend(
-                    page_mentions_py(
-                        ex, r.url, r.context, list(r.tokens),
-                        list(r.tok_start), list(r.tok_end),
-                    )
-                )
+            for url, text in zip(pdf["url"], pdf["text"]):
+                rows.extend(page_mentions_py(ex, url, text))
             yield pd.DataFrame(rows, columns=cols)
 
-    return tokens_df.select("url", "context", "tokens", "tok_start", "tok_end") \
-        .mapInPandas(kernel, MENTIONS_DDL)
+    return texts_df.select("url", "text").mapInPandas(kernel, MENTIONS_DDL)
 
 
 def norm_key_udf(extractor_bc):
@@ -111,25 +110,25 @@ def link_surfaces(
     surfaces_df: DataFrame, alias_dim: DataFrame, surface_col: str,
     extractor_bc,
 ) -> DataFrame:
-    """Attach (canonical_id, entity_type) to a surface column via exact
-    normalized-alias match; best candidate only.  Broadcast join — the
-    big side never shuffles."""
+    """Attach ``<surface_col>_norm_key`` and (canonical_id, entity_type)
+    to a surface column via exact normalized-alias match; best candidate
+    only.  Broadcast join — the big side never shuffles."""
     norm = norm_key_udf(extractor_bc)
+    key = f"{surface_col}_norm_key"
     best = alias_dim.filter(F.col("link_rank") == 1).select(
         F.col("norm_key"),
         F.col("canonical_id").alias(f"{surface_col}_canonical_id"),
         F.col("entity_type").alias(f"{surface_col}_entity_type"),
     )
-    return surfaces_df.withColumn(f"_{surface_col}_key", norm(surface_col)).join(
-        F.broadcast(best),
-        F.col(f"_{surface_col}_key") == best.norm_key,
-        "left",
-    ).drop("norm_key", f"_{surface_col}_key")
+    return surfaces_df.withColumn(key, norm(surface_col)).join(
+        F.broadcast(best), F.col(key) == best.norm_key, "left",
+    ).drop("norm_key")
 
 
 def link_triples(triples_df: DataFrame, alias_dim: DataFrame, extractor_bc) -> DataFrame:
     """Triples -> linked triples: subject_id and object_id (null for
-    literals like dates/numbers)."""
+    literals like dates/numbers), plus the ``NORM_KEY_COLS`` that
+    ``canonicalize_entities`` reads."""
     out = link_surfaces(triples_df, alias_dim, "subject", extractor_bc)
     out = out.withColumn("object_value", F.col("object")["@value"])
     out = link_surfaces(out, alias_dim, "object_value", extractor_bc)

@@ -3,14 +3,20 @@
 Stage DAG (each stage a lakehouse table, resumable):
 
     pages -> texts -> triples -> linked -> entity_clusters
-               \\-> tokens -> mentions                |
-                                 kg_triples <- MERGE -+
-                                 kg_entities <- MERGE
+               \\-> mentions       |              |
+                   kg_triples <- MERGE            |
+                  kg_entities <- MERGE -----------+
 
-``triples`` is one pass of the fused extraction kernel over the
-committed ``texts`` table (subject grid -> per-subject object grid ->
-assemble, all page-local), whose output rows are rebalanced before the
-write; ``tokens`` feeds only ``mentions``.
+``mentions`` and ``triples`` are each one pass over the committed
+``texts`` table; each tokenizes its pages inside its kernel, so no
+token table is materialized.  ``triples`` runs the fused extraction
+kernel (subject grid -> per-subject object grid -> assemble, all
+page-local), whose output rows are rebalanced before the write.
+``linked`` keeps each surface's normalized key (``subject_norm_key``,
+``object_value_norm_key``) and ``entity_clusters`` reads those columns;
+``kg_triples`` drops them.  A ``linked`` table committed by an older
+version of this module has no key columns: restart such a run under a
+new run_id rather than resuming it.
 
 Lifecycle mirrors the reference flagship run (SURVEY.md §3.1) with the
 pickle cache replaced by fingerprinted stage tables.  ``run()`` is
@@ -30,6 +36,7 @@ from pyspark.sql import functions as F
 from deepie_spark.operators import extract as ex_ops
 from deepie_spark.operators.canonicalize import canonicalize_entities
 from deepie_spark.operators.linking import (
+    NORM_KEY_COLS,
     alias_dim_with_key,
     detect_mentions,
     link_triples,
@@ -90,12 +97,7 @@ class KgPipeline:
             lambda: ex_ops.stage_texts(pages_df).withColumn("url_bucket", bucket),
             res, resume,
         )
-        tokens = self._stage(
-            "tokens", lambda: ex_ops.stage_tokens(texts, bc), res, resume
-        )
-        self._stage(
-            "mentions", lambda: detect_mentions(tokens, bc), res, resume
-        )
+        self._stage("mentions", lambda: detect_mentions(texts, bc), res, resume)
         # rebalance: the kernel keeps one output partition per texts
         # split, so without it the small triple rows land in many small
         # files and linked/entity_clusters pay a task per file (measured
@@ -113,19 +115,19 @@ class KgPipeline:
         )
         clusters = self._stage(
             "entity_clusters",
-            lambda: canonicalize_entities(linked, alias_dim, bc),
+            lambda: canonicalize_entities(linked, alias_dim),
             res, resume,
         )
 
         # -- graph materialization (MERGE) --------------------------------
-        def _kg_triples():
-            t = linked.withColumn("object_key", obj_key(F.col("object")))
-            return t.withColumn(
+        kg_t = (
+            linked.drop(*NORM_KEY_COLS)
+            .withColumn("object_key", obj_key(F.col("object")))
+            .withColumn(
                 "triple_key",
                 F.xxhash64("url", "subject", "predicate", "object_key"),
             )
-
-        kg_t = _kg_triples()
+        )
         self.lake.merge_upsert(kg_t, "kg_triples", ["triple_key"], run_id=self.run_id)
         res.stages_run.append("kg_triples")
 

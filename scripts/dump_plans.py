@@ -33,8 +33,34 @@ def _dedup_clusters_verify(spark, sf_dir):
     return ngram_jaccard_pairs(docs, n=2, threshold=0.8, candidates=pairs)
 
 
-# sub-plans of declared queries that their own plan does not show
-STEPS = {"dedup_clusters_verify": _dedup_clusters_verify}
+def _entity_clusters(spark, sf_dir):
+    """KgPipeline's entity_clusters stage over the linked table a
+    pipeline run committed (the stage has no declared query); the lake
+    is removed at exit."""
+    import atexit
+    import shutil
+    import tempfile
+
+    from deepie_spark.operators.canonicalize import canonicalize_entities
+    from deepie_spark.operators.linking import alias_dim_with_key
+    from deepie_spark.plans.pipeline import KgPipeline
+    from deepie_spark.sources.synth import corpus_dataframes
+
+    pages_df, _, alias_df = corpus_dataframes(spark, entrymod._pages_count(sf_dir))
+    root = tempfile.mkdtemp(prefix="plan_lake_")
+    atexit.register(shutil.rmtree, root, True)
+    pipe = KgPipeline(spark, root, entrymod._extractor())
+    pipe.run(pages_df, alias_df)
+    alias_dim = alias_dim_with_key(alias_df, pipe.extractor_bc)
+    return canonicalize_entities(pipe.lake.read("linked"), alias_dim)
+
+
+# sub-plans of declared queries, and pipeline stages, that no declared
+# query's plan shows
+STEPS = {
+    "dedup_clusters_verify": _dedup_clusters_verify,
+    "entity_clusters": _entity_clusters,
+}
 
 
 def main() -> None:

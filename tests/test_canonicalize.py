@@ -8,7 +8,7 @@ from deepie_spark.operators.canonicalize import (
     connected_components,
     node_id,
 )
-from deepie_spark.operators.linking import alias_dim_with_key, norm_key_udf
+from deepie_spark.operators.linking import alias_dim_with_key, link_triples, norm_key_udf
 
 
 def _cc_oracle(edges):
@@ -214,7 +214,7 @@ def test_cc_state_dir_rejects_stale_snapshots(spark, tmp_path):
 # -- canonicalize_entities vs the connected-components path --------------
 
 ALIAS_DDL = "alias string, canonical_id bigint, entity_type string, weight double"
-LINKED_DDL = "subject string, object map<string,string>"
+SURFACES_DDL = "subject string, object map<string,string>"
 
 
 def _cc_reference(linked, alias_dim, bc):
@@ -252,7 +252,7 @@ def _cc_reference(linked, alias_dim, bc):
 
 
 def _assert_same_clusters(linked, alias_dim, bc):
-    got = canonicalize_entities(linked, alias_dim, bc)
+    got = canonicalize_entities(linked, alias_dim)
     want = _cc_reference(linked, alias_dim, bc)
     assert got.columns == want.columns
     got_rows = sorted(tuple(r) for r in got.collect())
@@ -267,7 +267,6 @@ def bc(spark, extractor):
 
 def test_canonicalize_equals_cc_path_on_synth_corpus(spark, extractor, bc):
     from deepie_spark.operators.extract import extract_triples_fused
-    from deepie_spark.operators.linking import link_triples
     from deepie_spark.sources.synth import corpus_dataframes
 
     pages_df, _gold, alias_df = corpus_dataframes(spark, 120)
@@ -307,7 +306,9 @@ HOSTILE_ALIASES = [
 ]
 
 
-def _hostile_linked(spark):
+def _hostile_linked(spark, alias_dim, bc):
+    """Hand-built (subject, object) triples, linked so that they carry
+    the normalized key columns canonicalize_entities reads."""
     surfaces = [
         "alpha", "echo", "hub name", "ten only", "twelve only", "null one",
         "null two", "null three", "solo", "not in the dictionary",
@@ -317,14 +318,14 @@ def _hostile_linked(spark):
         (s, {"@value": o}) for s, o in zip(surfaces, reversed(surfaces))
     ]
     rows.append(("bravo", {"@value": None}))
-    return spark.createDataFrame(rows, LINKED_DDL)
+    return link_triples(spark.createDataFrame(rows, SURFACES_DDL), alias_dim, bc)
 
 
 def test_canonicalize_equals_cc_path_on_hostile_dictionary(spark, bc):
     alias_dim = alias_dim_with_key(
         spark.createDataFrame(HOSTILE_ALIASES, ALIAS_DDL), bc
     )
-    rows = _assert_same_clusters(_hostile_linked(spark), alias_dim, bc)
+    rows = _assert_same_clusters(_hostile_linked(spark, alias_dim, bc), alias_dim, bc)
     norm = {r[2]: r for r in rows}
     key = {s: " ".join(bc.value._alias_tokens(s)) for s, *_ in HOSTILE_ALIASES}
     chain = {norm[key[s]][0] for s in ("alpha", "bravo", "echo")}
@@ -339,5 +340,5 @@ def test_canonicalize_equals_cc_path_on_hostile_dictionary(spark, bc):
 
 def test_canonicalize_equals_cc_path_on_empty_dictionary(spark, bc):
     alias_dim = alias_dim_with_key(spark.createDataFrame([], ALIAS_DDL), bc)
-    rows = _assert_same_clusters(_hostile_linked(spark), alias_dim, bc)
+    rows = _assert_same_clusters(_hostile_linked(spark, alias_dim, bc), alias_dim, bc)
     assert rows and all(r[0] == r[1] and r[3] is None for r in rows)

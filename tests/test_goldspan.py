@@ -56,17 +56,17 @@ def test_search_spo_overlap_scan_continues():
 
 
 def test_gold_spans_distributed(spark, extractor):
-    from deepie_spark.operators.extract import stage_tokens
+    from deepie_spark.operators.extract import stage_texts
     from deepie_spark.sources.synth import corpus_dataframes
 
     pages_df, gold_df, _ = corpus_dataframes(spark, 60)
     bc = spark.sparkContext.broadcast(extractor)
-    tokens = stage_tokens(pages_df.select("url", "lang", "text"), bc)
+    texts = stage_texts(pages_df)
     gold = gold_df.select(
         "url", "subject", "predicate",
         F.col("object")["@value"].alias("object_value"),
     )
-    out = G.gold_spans(tokens, gold, bc, broadcast_gold=True)
+    out = G.gold_spans(texts, gold, bc, broadcast_gold=True)
     rows = out.collect()
     assert len(rows) == gold.count()
     placed = [r for r in rows if r["subject_start"] >= 0 and r["object_start"] >= 0]

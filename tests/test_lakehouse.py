@@ -62,7 +62,7 @@ def test_observed_lineage_matches_readback(spark, extractor, tmp_path):
     lin = {(r["stage"], r["version"]): r for r in lake.lineage().collect()}
     parts = lake.lineage_parts().collect()
     stages = {
-        "texts", "tokens", "mentions", "triples", "linked",
+        "texts", "mentions", "triples", "linked",
         "entity_clusters", "kg_triples", "kg_entities",
     }
     assert {s for s, _ in lin} == stages

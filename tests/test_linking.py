@@ -1,7 +1,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from deepie_spark.operators.extract import stage_texts, stage_tokens
+from deepie_spark.operators.extract import stage_texts
 from deepie_spark.operators.linking import (
     alias_dim_with_key,
     detect_mentions,
@@ -16,13 +16,13 @@ def bc(spark, extractor):
 
 
 @pytest.fixture(scope="module")
-def tokens(spark, bc):
+def texts(spark):
     pages_df, _, _ = corpus_dataframes(spark, 80)
-    return stage_tokens(stage_texts(pages_df), bc).cache()
+    return stage_texts(pages_df).cache()
 
 
-def test_mentions_surface_matches_alias(tokens, bc, world):
-    rows = detect_mentions(tokens, bc).collect()
+def test_mentions_surface_matches_alias(texts, bc, world):
+    rows = detect_mentions(texts, bc).collect()
     assert len(rows) > 50
     aliases = {a["alias"] for a in world.alias_rows}
     norm = {a.lower().replace(" ", "") for a in aliases}
@@ -30,8 +30,8 @@ def test_mentions_surface_matches_alias(tokens, bc, world):
         assert r["mention"].lower().replace(" ", "").replace("\xa0", "") in norm, r
 
 
-def test_mentions_link_candidates_carry_ids(tokens, bc, world):
-    df = detect_mentions(tokens, bc)
+def test_mentions_link_candidates_carry_ids(texts, bc, world):
+    df = detect_mentions(texts, bc)
     ids = {a["canonical_id"] for a in world.alias_rows}
     got = {r["canonical_id"] for r in df.select("canonical_id").distinct().collect()}
     assert got <= ids and len(got) > 10

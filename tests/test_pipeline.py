@@ -5,6 +5,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from deepie_spark.operators import metrics as M
+from deepie_spark.operators.linking import page_mentions_py
 from deepie_spark.plans.pipeline import KgPipeline
 from deepie_spark.sources.synth import corpus_dataframes
 
@@ -30,11 +31,18 @@ def test_pipeline_end_to_end_and_resume(spark, extractor, corpus_dfs, tmp_path_f
         return (url, t["subject"], t["predicate"],
                 tuple(sorted(dict(t["object"]).items())))
 
+    pages = pages_df.select("url", "text").collect()
     got = sorted(key(r["url"], r) for r in pipe.lake.read("triples").collect())
     want = sorted(
-        key(p["url"], t)
-        for p in pages_df.select("url", "text").collect()
-        for t in extractor.extract_page_py(p["text"])
+        key(p["url"], t) for p in pages for t in extractor.extract_page_py(p["text"])
+    )
+    assert got == want and len(want) > 0
+
+    # and the committed mentions stage is exactly the single-row trie
+    # oracle, page by page
+    got = sorted(tuple(r) for r in pipe.lake.read("mentions").collect())
+    want = sorted(
+        r for p in pages for r in page_mentions_py(extractor, p["url"], p["text"])
     )
     assert got == want and len(want) > 0
 
@@ -46,7 +54,7 @@ def test_pipeline_end_to_end_and_resume(spark, extractor, corpus_dfs, tmp_path_f
     # MERGE is idempotent (same triple keys -> same row count)
     n_before = kg.count()
     res2 = pipe.run(pages_df, alias_df)
-    assert set(res2.stages_skipped) >= {"texts", "tokens", "triples", "linked"}
+    assert set(res2.stages_skipped) >= {"texts", "mentions", "triples", "linked"}
     assert pipe.lake.read("kg_triples").count() == n_before
 
 

@@ -209,3 +209,43 @@ def test_jaccard_verify_stage_no_generate(spark):
     assert "BroadcastNestedLoopJoin" not in p
     assert "MapInPandas" not in p  # no signature recompute
     assert "array_intersect" not in p  # no verify recompute
+
+
+def test_mentions_is_one_kernel_over_texts(spark, extractor, tmp_path):
+    """Mention detection tokenizes its pages itself: over a texts scan
+    it plans as exactly one MapInPandas and no shuffle."""
+    from deepie_spark.operators.extract import stage_texts
+    from deepie_spark.operators.linking import detect_mentions
+    from deepie_spark.sources.lakehouse import Lakehouse
+
+    pages_df, _, _ = corpus_dataframes(spark, 20)
+    lake = Lakehouse(tmp_path / "lake", spark)
+    lake.write_stage(stage_texts(pages_df), "texts")
+    bc = spark.sparkContext.broadcast(extractor)
+    plan = (
+        detect_mentions(lake.read("texts"), bc)
+        ._jdf.queryExecution().executedPlan().toString()
+    )
+    assert plan.count("MapInPandas") == 1, plan
+    assert "Exchange" not in plan, plan
+
+
+def test_entity_clusters_runs_no_python(spark, extractor, tmp_path):
+    """entity_clusters, built as the pipeline builds it over a committed
+    linked table, reads the normalized keys linking already stored:
+    no Python node of any kind over the triple rows."""
+    from deepie_spark.operators.canonicalize import canonicalize_entities
+    from deepie_spark.operators.linking import alias_dim_with_key, link_triples
+    from deepie_spark.sources.lakehouse import Lakehouse
+
+    pages_df, _, alias_df = corpus_dataframes(spark, 20)
+    lake = Lakehouse(tmp_path / "lake", spark)
+    bc = spark.sparkContext.broadcast(extractor)
+    alias_dim = alias_dim_with_key(alias_df, bc)
+    linked = link_triples(extract_triples_fused(pages_df, bc), alias_dim, bc)
+    lake.write_stage(linked, "linked")
+    p = plan_of(canonicalize_entities(lake.read("linked"), alias_dim))
+    for node in ("ArrowEvalPython", "BatchEvalPython", "MapInPandas"):
+        assert node not in p, node
+    read_schema = p.split("ReadSchema", 1)[1][:200]
+    assert "norm_key" in read_schema and "subject:" not in read_schema

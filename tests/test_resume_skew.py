@@ -1,50 +1,75 @@
-"""Mid-crawl resume (kill after stage k) and hub-entity salting
+"""Mid-crawl resume (kill at stage k) and hub-entity salting
 equality (SURVEY.md §5 test plan items 5-6)."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from deepie_spark.operators import extract as ex_ops
 from deepie_spark.operators.skew import salted_count
 from deepie_spark.plans.pipeline import KgPipeline
 from deepie_spark.sources.synth import corpus_dataframes
 
+STAGES = ["texts", "mentions", "triples", "linked", "entity_clusters"]
+KG_TABLES = ["kg_triples", "kg_entities"]
 
-def test_resume_after_partial_crash(spark, extractor, tmp_path):
-    """Simulate a job killed after the tokens stage: a fresh pipeline
-    with the same run_id must skip the committed stages and produce
-    exactly the triples of an uninterrupted run."""
-    pages_df, _, alias_df = corpus_dataframes(spark, 80)
 
-    # uninterrupted reference run
-    ref = KgPipeline(spark, str(tmp_path / "ref"), extractor, run_id="r1")
-    ref.run(pages_df, alias_df)
-    want = {
-        r["triple_key"] for r in ref.lake.read("kg_triples").collect()
-    }
+@pytest.fixture(scope="module")
+def crash_corpus(spark):
+    return corpus_dataframes(spark, 80)
 
-    # "crashed" run: only texts + tokens committed
-    crashed = KgPipeline(spark, str(tmp_path / "lake"), extractor, run_id="r1")
-    bc = crashed.extractor_bc
-    bucket = F.pmod(F.xxhash64("url"), F.lit(32)).cast("int")
-    texts = ex_ops.stage_texts(pages_df).withColumn("url_bucket", bucket)
-    crashed.lake.write_stage(texts, "texts", run_id="r1")
-    tokens = ex_ops.stage_tokens(crashed.lake.read("texts"), bc)
-    crashed.lake.write_stage(tokens, "tokens", run_id="r1")
+
+@pytest.fixture(scope="module")
+def uninterrupted(spark, extractor, crash_corpus, tmp_path_factory):
+    """kg_triples keys and kg_entities rows of one uninterrupted run."""
+    pages_df, _, alias_df = crash_corpus
+    ref = KgPipeline(spark, str(tmp_path_factory.mktemp("ref")), extractor, run_id="r1")
+    res = ref.run(pages_df, alias_df)
+    assert res.stages_run == STAGES + KG_TABLES
+    return _kg_state(ref.lake)
+
+
+def _kg_state(lake):
+    keys = {r["triple_key"] for r in lake.read("kg_triples").collect()}
+    entities = sorted(tuple(r) for r in lake.read("kg_entities").collect())
+    return keys, entities
+
+
+@pytest.mark.parametrize("killed", STAGES)
+def test_resume_after_partial_crash(
+    spark, extractor, crash_corpus, uninterrupted, tmp_path, monkeypatch, killed
+):
+    """A job killed while committing stage k (its data and lineage
+    written, its pointer not swapped): a fresh pipeline with the same
+    run_id skips the stages before k, runs k and every later stage, and
+    ends with the kg tables of an uninterrupted run."""
+    pages_df, _, alias_df = crash_corpus
+    root = str(tmp_path / "lake")
+    crashed = KgPipeline(spark, root, extractor, run_id="r1")
+    commit = crashed.lake._commit
+
+    def kill_at(name, version, layout=None):
+        if name == killed:
+            raise RuntimeError(f"killed before committing {name}")
+        commit(name, version, layout)
+
+    monkeypatch.setattr(crashed.lake, "_commit", kill_at)
+    with pytest.raises(RuntimeError, match="killed before committing"):
+        crashed.run(pages_df, alias_df)
 
     # resume with a NEW pipeline object (fresh process semantics)
-    resumed = KgPipeline(spark, str(tmp_path / "lake"), extractor, run_id="r1")
+    resumed = KgPipeline(spark, root, extractor, run_id="r1")
     res = resumed.run(pages_df, alias_df, resume=True)
-    assert "texts" in res.stages_skipped and "tokens" in res.stages_skipped
-    assert "triples" in res.stages_run
+    k = STAGES.index(killed)
+    assert res.stages_skipped == STAGES[:k]
+    assert res.stages_run == STAGES[k:] + KG_TABLES
 
-    got = {r["triple_key"] for r in resumed.lake.read("kg_triples").collect()}
-    assert got == want
+    keys, entities = _kg_state(resumed.lake)
+    assert keys == uninterrupted[0] and len(keys) > 0
+    assert entities == uninterrupted[1] and len(entities) > 0
 
     # lineage recorded per-partition rows for every committed stage
     parts = resumed.lake.lineage_parts()
     stages = {r["stage"] for r in parts.select("stage").distinct().collect()}
-    assert {"texts", "tokens", "triples"} <= stages
+    assert set(STAGES + KG_TABLES) <= stages
 
 
 def test_hub_entity_salted_counts_equal_plain(spark, extractor, world):

@@ -46,18 +46,14 @@ def test_pipeline_hub_entity_skew(spark):
     """Hub-entity skew through the REAL pipeline operators, not the
     salting primitives in isolation: one page's entity dominates ~30%
     of all mentions in the corpus (a celebrity on a web crawl), then
-    tokens -> mentions -> salted counts -> link -> canonicalize must
+    mentions -> salted counts -> link -> canonicalize must
     (a) stay value-correct and (b) keep the hot key's reducer input
     bounded — asserted on per-partition row counts of the salted
     partial aggregation, the stage where an unsalted plan funnels the
     hub's rows into ONE reducer."""
     from deepie_spark.config.schema import SYNTH_SCHEMA
     from deepie_spark.operators.canonicalize import canonicalize_entities
-    from deepie_spark.operators.extract import (
-        PageExtractor,
-        extract_triples_fused,
-        stage_tokens,
-    )
+    from deepie_spark.operators.extract import PageExtractor, extract_triples_fused
     from deepie_spark.operators.linking import (
         alias_dim_with_key,
         detect_mentions,
@@ -74,8 +70,7 @@ def test_pipeline_hub_entity_skew(spark):
     pages, _, _ = gen_corpus(300)
     hub_page, hub_cid = None, None
     for p in pages:
-        ctx, toks, st_, en_ = ex.tokenize_page(p["text"])
-        ms = page_mentions_py(ex, p["url"], ctx, toks, st_, en_)
+        ms = page_mentions_py(ex, p["url"], p["text"])
         if len(ms) >= 2:
             from collections import Counter
 
@@ -91,8 +86,7 @@ def test_pipeline_hub_entity_skew(spark):
     ]
     df = spark.createDataFrame(rows, "url string, lang string, text string")
 
-    tokens = stage_tokens(df, bc)
-    mentions = detect_mentions(tokens, bc).cache()
+    mentions = detect_mentions(df, bc).cache()
     plain = {
         r["canonical_id"]: r["count"]
         for r in mentions.groupBy("canonical_id").count().collect()
@@ -142,7 +136,7 @@ def test_pipeline_hub_entity_skew(spark):
     alias_dim = alias_dim_with_key(alias_df, bc)
     triples = extract_triples_fused(df, bc)
     linked = link_triples(triples, alias_dim, bc)
-    clusters = canonicalize_entities(linked, alias_dim, bc).cache()
+    clusters = canonicalize_entities(linked, alias_dim).cache()
     assert clusters.count() == clusters.select("norm_key").distinct().count()
     hub_cluster = clusters.where(
         F.col("cluster_canonical_id") == hub_cid

@@ -16,19 +16,23 @@ driver-side union-find over one small collect, and one broadcast join
 applies it (no fixpoint, no shuffle of the triple side).
 
 General operator (``connected_components``, for data-sized graphs:
-``dedup_clusters`` and the CC query).  Alternating large-star /
-small-star (Kiveris et al., "Connected Components in MapReduce and
-Beyond", SOCC'14 — public), all DataFrame joins, a lineage cut each
-round (``localCheckpoint`` by default; reliable ``checkpoint()`` or
-resumable parquet round snapshots on request — see
-``connected_components``), convergence = edge set unchanged (count +
-xxhash fingerprint).  Star-shaped graphs converge in 2-3 rounds; the
+``dedup_clusters`` and the CC query).  Round 1 is a partition-local
+union-find contraction (one ``mapInPandas``: every node to its
+partition-local component min); the rounds after it alternate
+large-star / small-star (Kiveris et al., "Connected Components in
+MapReduce and Beyond", SOCC'14 — public), all DataFrame joins, with a
+lineage cut each round (``localCheckpoint`` by default; reliable
+``checkpoint()`` or resumable parquet round snapshots on request — see
+``connected_components``).  The loop stops as soon as the edge set is a
+star forest (``_is_star_forest``: one aggregation and an emptiness
+check), which is the large-star/small-star fixpoint.  A graph whose
+edges fit one partition is a star forest after the contraction; the
 iteration cap guards pathological chains.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -40,8 +44,9 @@ def _canon_edges(edges: DataFrame) -> DataFrame:
     return e.where(F.col("src") != F.col("dst")).distinct()
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(
+def _fingerprint_aggs():
+    """(n, h): edge count and an order-independent xxhash sum."""
+    return (
         F.count(F.lit(1)).alias("n"),
         F.coalesce(
             F.pmod(
@@ -50,8 +55,63 @@ def _fingerprint(edges: DataFrame) -> tuple[int, int]:
             ).cast("long"),
             F.lit(0),
         ).alias("h"),
-    ).first()
+    )
+
+
+def _fingerprint(edges: DataFrame) -> tuple[int, int]:
+    row = edges.agg(*_fingerprint_aggs()).first()
     return int(row["n"]), int(row["h"])
+
+
+def _is_star_forest(e: DataFrame) -> bool:
+    """True when the canonical (src < dst, distinct) edges ``e`` form a
+    star forest: every dst has degree 1, so it is a leaf hung from a
+    smaller root, and no dst is two edges' leaf or another edge's root.
+    Then every component is a star rooted at its min id, which
+    large-star and small-star leave unchanged — their fixpoint.  One
+    aggregation over the edges, then an emptiness check."""
+    roles = e.select(
+        F.explode(
+            F.array(
+                F.struct(F.col("src").alias("node"), F.lit(0).alias("is_dst")),
+                F.struct(F.col("dst").alias("node"), F.lit(1).alias("is_dst")),
+            )
+        ).alias("r")
+    ).select("r.*")
+    per_node = roles.groupBy("node").agg(
+        F.max("is_dst").alias("is_dst"), F.count(F.lit(1)).alias("degree")
+    )
+    return per_node.where(
+        (F.col("is_dst") == 1) & (F.col("degree") > 1)
+    ).isEmpty()
+
+
+def _contract_partition(batches):
+    """mapInPandas body: union-find over every edge of the partition,
+    then (local min, node) for every node that is not its local root.
+    The edges out connect exactly the nodes the edges in connected
+    within this partition, so the components of the whole graph are
+    unchanged; a graph held by one partition comes out a star forest."""
+    import pandas as pd
+
+    parent: dict[int, int] = {}
+
+    def find(x: int) -> int:
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for pdf in batches:
+        for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
+            parent.setdefault(a, a)
+            parent.setdefault(b, b)
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                parent[max(ra, rb)] = min(ra, rb)  # every root is its min
+    pairs = [(r, n) for n in parent if (r := find(n)) != n]
+    if pairs:
+        yield pd.DataFrame(pairs, columns=["src", "dst"])
 
 
 def _min_neighbor(directed: DataFrame) -> DataFrame:
@@ -193,6 +253,17 @@ def connected_components(
     re-run the whole upstream chain — for ``dedup_clusters``, LSH and
     Jaccard verification — once per side of the src/dst union.)
 
+    Round 1 is a partition-local union-find contraction: one
+    ``mapInPandas`` over the cut's partitions emits (local min, node)
+    for every node that is not its partition's root, deduped across
+    partitions.  Every later round is one large-star + small-star step,
+    run only while the edge set is not yet a star forest
+    (``_is_star_forest``, tested before each such round): a star forest
+    is their fixpoint, so the loop stops there with no confirmation
+    round.  A cut that AQE coalesces to one partition is a star forest
+    after the contraction, and no star round runs.  ``max_iter`` caps
+    the rounds a call runs, counting the contraction as one.
+
     Lineage/fault-tolerance modes for the per-round cut (each CC round
     builds joins on the previous round's output; without a cut the plan
     deepens geometrically):
@@ -219,7 +290,9 @@ def connected_components(
       them) restarts on an input with a self-loop or a null endpoint,
       since its fingerprint mismatches; on any other input its
       ``round_0000`` holds the same rows as the cut, so resuming it is
-      safe.
+      safe.  The fingerprint is observed in the ``round_0000`` write
+      job.  Every round's snapshot has the input's components, so a
+      resume from any completed round converges to the same answer.
       Takes precedence over ``checkpoint_dir``.
 
     All three modes produce identical components (tested)."""
@@ -230,7 +303,16 @@ def connected_components(
     def cut(df: DataFrame, rnd: int) -> DataFrame:
         if state_dir is not None:
             path = f"{state_dir}/round_{rnd:04d}"
-            df.write.mode("overwrite").parquet(path)
+            if rnd == 0:
+                # the input fingerprint, observed in the write job itself
+                obs = Observation()
+                df.observe(obs, *_fingerprint_aggs()).write.mode(
+                    "overwrite"
+                ).parquet(path)
+                m = obs.get
+                _write_input_fp(state_dir, (m["n"], m["h"]))
+            else:
+                df.write.mode("overwrite").parquet(path)
             return spark.read.parquet(path)
         if checkpoint_dir is not None:
             return df.checkpoint(eager=True)
@@ -256,21 +338,18 @@ def connected_components(
     else:
         r0 = cut(_round0(edges), 0)
         start = 1
-        if state_dir is not None:
-            # fingerprint of the cut == fingerprint of _round0(edges)
-            # (same rows, order-independent sum)
-            _write_input_fp(state_dir, _fingerprint(r0))
     if start == 1:
         e = r0.where(F.col("src") != F.col("dst"))
     else:
         e = spark.read.parquet(f"{state_dir}/round_{last:04d}")
-    prev = _fingerprint(e)
     for rnd in range(start, start + max_iter):
-        e = cut(_canon_edges(_small_star(_large_star(e))), rnd)
-        cur = _fingerprint(e)
-        if cur == prev:
+        if rnd == 1:
+            local = e.mapInPandas(_contract_partition, "src bigint, dst bigint")
+            e = cut(_canon_edges(local), rnd)
+            continue
+        if _is_star_forest(e):
             break
-        prev = cur
+        e = cut(_canon_edges(_small_star(_large_star(e))), rnd)
     nodes = (
         r0.select(F.col("src").alias("node"))
         .union(r0.select(F.col("dst").alias("node")))

@@ -566,8 +566,9 @@ def dedup_clusters(
 
         LSH chain (``lsh_dedup_pairs``)            candidate pairs
           -> n-gram Jaccard on candidates only      verified pairs
-          -> connected components (salted           duplicate clusters
-             large-star/small-star, canonicalize.py)
+          -> connected components (partition-local  duplicate clusters
+             union-find, then large-star/small-star
+             until a star forest, canonicalize.py)
           -> (doc_id, cluster_id, keep)             keep = min-id doc
 
     This is the "which rows do I actually drop" operator a corpus

@@ -1,9 +1,12 @@
+import os
 import random
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
 
 from deepie_spark.operators.canonicalize import (
+    _is_star_forest,
     canonicalize_entities,
     connected_components,
     node_id,
@@ -42,6 +45,31 @@ def _cc_oracle(edges):
                 comp[n] = comp[comp[n]]
                 changed = True
     return comp
+
+
+@contextmanager
+def _sql_conf(spark, settings):
+    """Set SQL confs for the block, then restore the previous values."""
+    old = {k: spark.conf.get(k, None) for k in settings}
+    try:
+        for k, v in settings.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+# the round-0 cut in one partition, or in every shuffle partition
+ONE_PARTITION = {"spark.sql.shuffle.partitions": "1"}
+MANY_PARTITIONS = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
+
+
+def _rounds(state):
+    return sorted(d for d in os.listdir(state) if d.startswith("round_"))
 
 
 def _check(spark, edges):
@@ -148,25 +176,25 @@ def test_cc_kill_one_round_resume(spark, tmp_path):
     snapshots; a rerun with the same state_dir resumes from the last
     snapshot — writing only NEW rounds — and converges to the same
     components as an uninterrupted run."""
-    import os
-
-    # a long chain needs several large/small-star rounds to converge
+    # a long chain cut over several partitions needs large/small-star
+    # rounds after the partition-local contraction (round 1)
     edges = [(i, i + 1) for i in range(1, 40)]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
     state = str(tmp_path / "cc_state")
 
-    connected_components(df, max_iter=1, state_dir=state).collect()  # "crash"
-    rounds_before = sorted(
-        d for d in os.listdir(state) if d.startswith("round_")
-    )
-    assert rounds_before == ["round_0000", "round_0001"]
-    mtime_before = os.path.getmtime(os.path.join(state, "round_0001", "_SUCCESS"))
+    with _sql_conf(spark, MANY_PARTITIONS):
+        connected_components(df, max_iter=1, state_dir=state).collect()  # "crash"
+        rounds_before = _rounds(state)
+        assert rounds_before == ["round_0000", "round_0001"]
+        mtime_before = os.path.getmtime(
+            os.path.join(state, "round_0001", "_SUCCESS")
+        )
 
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(df, state_dir=state).collect()
-    }
-    rounds_after = sorted(d for d in os.listdir(state) if d.startswith("round_"))
+        got = {
+            r["node"]: r["component"]
+            for r in connected_components(df, state_dir=state).collect()
+        }
+    rounds_after = _rounds(state)
     # resume appended rounds >= 2 instead of rewriting 0/1 from scratch
     assert rounds_after[: len(rounds_before)] == rounds_before
     assert len(rounds_after) > len(rounds_before)
@@ -209,6 +237,91 @@ def test_cc_state_dir_rejects_stale_snapshots(spark, tmp_path):
     assert got2 == got
     for d in rounds:
         assert os.path.getmtime(os.path.join(state, d, "_SUCCESS")) == mtimes[d]
+
+
+def test_is_star_forest_hand_cases(spark):
+    def star_forest(edges):
+        return _is_star_forest(
+            spark.createDataFrame(edges, "src bigint, dst bigint")
+        )
+
+    assert star_forest([(1, 2), (1, 3), (1, 4)])  # a star
+    assert star_forest([(1, 2), (1, 3), (10, 11), (10, 12)])  # two stars
+    assert not star_forest([(1, 2), (2, 3)])  # a path of length 2
+    assert not star_forest([(1, 3), (2, 3)])  # a leaf with two roots
+    assert star_forest([])  # no edges
+
+
+def _random_graph(rng):
+    """Disjoint chains, stars and cycles on shuffled ids, a few random
+    cross links, self-loops, duplicated and reversed edges, and edges
+    with a null endpoint."""
+    ids = rng.sample(range(1, 10_000), 400)
+    edges = []
+
+    def take(k):
+        return [ids.pop() for _ in range(k)]
+
+    for _ in range(3):  # chains
+        c = take(rng.randint(5, 30))
+        edges += list(zip(c, c[1:]))
+    for _ in range(3):  # stars
+        hub, *leaves = take(rng.randint(3, 20))
+        edges += [(hub, v) for v in leaves]
+    for _ in range(2):  # cycles
+        c = take(rng.randint(3, 12))
+        edges += list(zip(c, c[1:] + c[:1]))
+    used = sorted({n for e in edges for n in e})
+    edges += [(rng.choice(used), rng.choice(used)) for _ in range(4)]
+    edges += [(n, n) for n in take(2)]  # self-loop-only nodes
+    edges += [(rng.choice(used),) * 2 for _ in range(2)]
+    edges += [(b, a) for a, b in rng.sample(edges, 10)]  # reversed
+    edges += rng.sample(edges, 10)  # duplicated
+    edges += [(take(1)[0], None), (None, rng.choice(used)), (None, None)]
+    rng.shuffle(edges)
+    return edges
+
+
+def _cc_oracle_nulls(edges):
+    """Union-find over the edges without a null endpoint; every endpoint
+    (null included) is a node, and a null node's component is null."""
+    want = _cc_oracle(
+        [(s, d) for s, d in edges if s is not None and d is not None]
+    )
+    for e in edges:
+        for n in e:
+            want.setdefault(n, n)
+    return want
+
+
+@pytest.mark.parametrize(
+    "partitioning,seed", [(ONE_PARTITION, 3), (MANY_PARTITIONS, 4)],
+    ids=["one", "many"],
+)
+def test_cc_random_graph_matches_union_find_in_every_mode(
+    spark, tmp_path, partitioning, seed
+):
+    """A random graph matches union-find in all three lineage modes,
+    with the round-0 cut in one partition (the contraction leaves a
+    star forest: round_0000 and round_0001 only) and in many (star
+    rounds run after the contraction)."""
+    edges = _random_graph(random.Random(seed))
+    want = _cc_oracle_nulls(edges)
+    assert None in want and len(set(want.values())) > 5
+    df = spark.createDataFrame(edges, "src bigint, dst bigint")
+    state = str(tmp_path / "state")
+    with _sql_conf(spark, partitioning):
+        for mode in ({}, {"checkpoint_dir": str(tmp_path / "ckpt")},
+                     {"state_dir": state}):
+            got = {
+                r["node"]: r["component"]
+                for r in connected_components(df, **mode).collect()
+            }
+            assert got == want, mode
+    if partitioning is ONE_PARTITION:
+        assert _rounds(state) == ["round_0000", "round_0001"]
+    else:
+        assert len(_rounds(state)) > 2
 
 
 # -- canonicalize_entities vs the connected-components path --------------

@@ -12,8 +12,10 @@ the ones ``link_triples`` already computed and kept as columns of
 ``linked``, so canonicalization runs no Python over triple rows.
 Triples add no edges, so the graph is the alias dictionary the
 extractor already broadcasts whole: ``alias_components`` solves it by a
-driver-side union-find over one small collect, and one broadcast join
-applies it (no fixpoint, no shuffle of the triple side).
+driver-side union-find over the dimension ``alias_dim_with_key`` keyed
+on the driver (a local DataFrame, so reading it runs no Spark job), and
+one broadcast join applies it (no fixpoint, no shuffle of the triple
+side).  A null key — a null or blank alias — is no node.
 
 General operator (``connected_components``, for data-sized graphs:
 ``dedup_clusters`` and the CC query).  Round 1 is a partition-local
@@ -375,11 +377,16 @@ def node_id(col):
 def alias_components(alias_dim: DataFrame) -> DataFrame:
     """(node, component, cluster_canonical_id) for every alias node:
     the min node id and min canonical_id of its cluster.  Driver-side
-    union-find over the distinct (node, canonical_id) rows; a null
-    canonical_id links nothing, as under an equi-join."""
-    rows = (
-        alias_dim.select(node_id("norm_key").alias("node"), "canonical_id")
-        .distinct()
+    union-find over the distinct (node, canonical_id) pairs of the keyed
+    aliases; a null norm_key or canonical_id links nothing, as under an
+    equi-join.  Over the local dimension ``alias_dim_with_key`` returns,
+    the collect runs no Spark job (pairs are deduplicated here, not by a
+    ``distinct``), and the result is a local DataFrame too."""
+    import pyarrow as pa
+
+    rows = dict.fromkeys(
+        tuple(r) for r in alias_dim.where(F.col("norm_key").isNotNull())
+        .select(node_id("norm_key").alias("node"), "canonical_id")
         .collect()
     )
     parent: dict[int, int] = {}
@@ -401,9 +408,14 @@ def alias_components(alias_dim: DataFrame) -> DataFrame:
         if cid is not None:
             r = find(node)
             best[r] = min(best.get(r, cid), cid)
+    comps = [find(n) for n in parent]
     cid_type = alias_dim.schema["canonical_id"].dataType.simpleString()
     return alias_dim.sparkSession.createDataFrame(
-        [(n, find(n), best.get(find(n))) for n in parent],
+        pa.table({
+            "node": list(parent),
+            "component": comps,
+            "cluster_canonical_id": [best.get(c) for c in comps],
+        }),
         f"node bigint, component bigint, cluster_canonical_id {cid_type}",
     )
 

@@ -10,11 +10,16 @@ alias dimension, ranked by alias weight then canonical_id — a
 broadcast join, no UDF on the scoring side.
 
 Scale notes: the alias dimension is small (millions of rows at most)
--> broadcast; the mention stream is huge -> never shuffled here (each
-page is tokenized and trie-matched in one mapInPandas over ``texts``);
-the link join is broadcast so it adds no shuffle either.  Linking keeps
-each surface's normalized key as a column of its output, so
-canonicalization reads it instead of normalizing the surface again.
+-> keyed once per run on the driver, which already holds every alias
+in the broadcast extractor's trie, and kept as a local DataFrame, so
+no consumer re-derives it and none needs a Spark job to read it; the
+mention stream is huge -> never shuffled here (each page is tokenized
+and trie-matched in one mapInPandas over ``texts``); linking keys both
+surfaces of a triple in one Python pass and broadcast-joins the
+dimension, so it adds no shuffle either.  Linking keeps each surface's
+normalized key as a column of its output, so canonicalization reads it
+instead of normalizing the surface again.  A blank key (an alias or
+surface with no tokens) is null on both sides: it links nothing.
 """
 
 from __future__ import annotations
@@ -91,49 +96,95 @@ def norm_key_udf(extractor_bc):
     return F.pandas_udf(_norm, "string")
 
 
+def _rank_order(weight, canonical_id) -> tuple:
+    """Sort key of the link rank, in the order Spark sorts
+    ``weight desc, canonical_id asc``: weight descending with NaN above
+    every number and nulls last, then canonical_id ascending with nulls
+    first."""
+    if weight is None:
+        w = (2,)
+    elif weight != weight:  # NaN
+        w = (0,)
+    else:
+        w = (1, -weight)
+    return w, (canonical_id is not None, canonical_id)
+
+
 def alias_dim_with_key(alias_df: DataFrame, extractor_bc) -> DataFrame:
     """Alias dimension + norm_key + deterministic rank among candidates
-    sharing a key (weight desc, canonical_id asc)."""
-    from pyspark.sql import Window
+    sharing a key (weight desc, canonical_id asc).
 
-    norm = norm_key_udf(extractor_bc)
-    w = Window.partitionBy("norm_key").orderBy(
-        F.desc("weight"), F.asc("canonical_id")
-    )
-    return (
-        alias_df.withColumn("norm_key", norm("alias"))
-        .withColumn("link_rank", F.row_number().over(w))
-    )
+    Keyed once, on the driver: ``alias_df`` is collected (as Arrow) and
+    every alias is keyed with the extractor's own ``_alias_tokens`` —
+    the driver already holds the whole dictionary in the extractor's
+    trie, built by that same call.  A blank alias keys to null, so it
+    links nothing.  The result is a local DataFrame (a
+    ``LocalTableScan``): consumers read and broadcast it with no Spark
+    job and no Python worker, however many of them there are."""
+    import pyarrow as pa
+    from pyspark.sql.types import IntegerType, StringType, StructField, StructType
 
-
-def link_surfaces(
-    surfaces_df: DataFrame, alias_dim: DataFrame, surface_col: str,
-    extractor_bc,
-) -> DataFrame:
-    """Attach ``<surface_col>_norm_key`` and (canonical_id, entity_type)
-    to a surface column via exact normalized-alias match; best candidate
-    only.  Broadcast join — the big side never shuffles."""
-    norm = norm_key_udf(extractor_bc)
-    key = f"{surface_col}_norm_key"
-    best = alias_dim.filter(F.col("link_rank") == 1).select(
-        F.col("norm_key"),
-        F.col("canonical_id").alias(f"{surface_col}_canonical_id"),
-        F.col("entity_type").alias(f"{surface_col}_entity_type"),
-    )
-    return surfaces_df.withColumn(key, norm(surface_col)).join(
-        F.broadcast(best), F.col(key) == best.norm_key, "left",
-    ).drop("norm_key")
+    ex = extractor_bc.value
+    table = alias_df.toArrow()
+    keys = [
+        None if a is None else " ".join(ex._alias_tokens(a)) or None
+        for a in table.column("alias").to_pylist()
+    ]
+    order = [
+        _rank_order(w, c)
+        for w, c in zip(table.column("weight").to_pylist(),
+                        table.column("canonical_id").to_pylist())
+    ]
+    by_key: dict = {}
+    for i, k in enumerate(keys):
+        by_key.setdefault(k, []).append(i)
+    rank = [0] * len(keys)
+    for rows in by_key.values():
+        rows.sort(key=order.__getitem__)
+        for r, i in enumerate(rows, 1):
+            rank[i] = r
+    table = table.append_column("norm_key", pa.array(keys, pa.string()))
+    table = table.append_column("link_rank", pa.array(rank, pa.int32()))
+    schema = StructType(alias_df.schema.fields + [
+        StructField("norm_key", StringType()),
+        StructField("link_rank", IntegerType(), False),
+    ])
+    return alias_df.sparkSession.createDataFrame(table, schema)
 
 
 def link_triples(triples_df: DataFrame, alias_dim: DataFrame, extractor_bc) -> DataFrame:
     """Triples -> linked triples: subject_id and object_id (null for
     literals like dates/numbers), plus the ``NORM_KEY_COLS`` that
-    ``canonicalize_entities`` reads."""
-    out = link_surfaces(triples_df, alias_dim, "subject", extractor_bc)
-    out = out.withColumn("object_value", F.col("object")["@value"])
-    out = link_surfaces(out, alias_dim, "object_value", extractor_bc)
+    ``canonicalize_entities`` reads.
+
+    Both surface keys come from one projection, so the triple rows make
+    one Python pass; a blank key becomes null (it links nothing, as on
+    the alias side).  Each side then takes the best candidate of its
+    key (``link_rank`` 1) by a broadcast join — the big side never
+    shuffles."""
+    norm = norm_key_udf(extractor_bc)
+    subject_key, object_key = NORM_KEY_COLS
+    keyed = (
+        triples_df.withColumn("object_value", F.col("object")["@value"])
+        .select(
+            "*",
+            norm("subject").alias(subject_key),
+            norm("object_value").alias(object_key),
+        )
+        .withColumns({k: F.when(F.col(k) != "", F.col(k)) for k in NORM_KEY_COLS})
+    )
+    best = alias_dim.where(F.col("link_rank") == 1)
+
+    def side(key: str, id_col: str) -> DataFrame:
+        return F.broadcast(best.select(
+            F.col("norm_key").alias(key), F.col("canonical_id").alias(id_col)
+        ))
+
     return (
-        out.withColumnRenamed("subject_canonical_id", "subject_id")
-        .withColumnRenamed("object_value_canonical_id", "object_id")
-        .drop("subject_entity_type", "object_value_entity_type")
+        keyed.join(side(subject_key, "subject_id"), subject_key, "left")
+        .join(side(object_key, "object_id"), object_key, "left")
+        .select(
+            *triples_df.columns, subject_key, "subject_id",
+            "object_value", object_key, "object_id",
+        )
     )

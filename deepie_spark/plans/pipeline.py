@@ -27,6 +27,7 @@ stages (lineage check) and re-derives the rest — the north rule's
 
 from __future__ import annotations
 
+import functools
 import time
 from dataclasses import dataclass, field
 
@@ -109,13 +110,15 @@ class KgPipeline:
             res, resume,
         )
 
-        alias_dim = alias_dim_with_key(alias_df, bc)
+        # keyed on the driver, once per run and only when a stage that
+        # reads it runs: a resume over committed stages never reads alias_df
+        alias_dim = functools.cache(lambda: alias_dim_with_key(alias_df, bc))
         linked = self._stage(
-            "linked", lambda: link_triples(triples, alias_dim, bc), res, resume
+            "linked", lambda: link_triples(triples, alias_dim(), bc), res, resume
         )
         clusters = self._stage(
             "entity_clusters",
-            lambda: canonicalize_entities(linked, alias_dim),
+            lambda: canonicalize_entities(linked, alias_dim()),
             res, resume,
         )
 

@@ -33,16 +33,14 @@ def _dedup_clusters_verify(spark, sf_dir):
     return ngram_jaccard_pairs(docs, n=2, threshold=0.8, candidates=pairs)
 
 
-def _entity_clusters(spark, sf_dir):
-    """KgPipeline's entity_clusters stage over the linked table a
-    pipeline run committed (the stage has no declared query); the lake
-    is removed at exit."""
+def _pipeline_run(spark, sf_dir):
+    """(pipeline, alias_df) after a KgPipeline.run into a temporary lake,
+    removed at exit: the committed stage tables the pipeline's later
+    stages read."""
     import atexit
     import shutil
     import tempfile
 
-    from deepie_spark.operators.canonicalize import canonicalize_entities
-    from deepie_spark.operators.linking import alias_dim_with_key
     from deepie_spark.plans.pipeline import KgPipeline
     from deepie_spark.sources.synth import corpus_dataframes
 
@@ -51,6 +49,28 @@ def _entity_clusters(spark, sf_dir):
     atexit.register(shutil.rmtree, root, True)
     pipe = KgPipeline(spark, root, entrymod._extractor())
     pipe.run(pages_df, alias_df)
+    return pipe, alias_df
+
+
+def _linked(spark, sf_dir):
+    """KgPipeline's linked stage over the triples table a pipeline run
+    committed (the stage has no declared query)."""
+    from deepie_spark.operators.linking import alias_dim_with_key, link_triples
+
+    pipe, alias_df = _pipeline_run(spark, sf_dir)
+    bc = pipe.extractor_bc
+    return link_triples(
+        pipe.lake.read("triples"), alias_dim_with_key(alias_df, bc), bc
+    )
+
+
+def _entity_clusters(spark, sf_dir):
+    """KgPipeline's entity_clusters stage over the linked table a
+    pipeline run committed (the stage has no declared query)."""
+    from deepie_spark.operators.canonicalize import canonicalize_entities
+    from deepie_spark.operators.linking import alias_dim_with_key
+
+    pipe, alias_df = _pipeline_run(spark, sf_dir)
     alias_dim = alias_dim_with_key(alias_df, pipe.extractor_bc)
     return canonicalize_entities(pipe.lake.read("linked"), alias_dim)
 
@@ -59,6 +79,7 @@ def _entity_clusters(spark, sf_dir):
 # query's plan shows
 STEPS = {
     "dedup_clusters_verify": _dedup_clusters_verify,
+    "linked": _linked,
     "entity_clusters": _entity_clusters,
 }
 

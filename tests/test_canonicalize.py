@@ -334,16 +334,17 @@ def _cc_reference(linked, alias_dim, bc):
     """Reference entity clusters from the general operator:
     connected_components over alias-star edges (every alias node of a
     canonical_id to that id's min node), then min canonical_id per
-    component."""
+    component.  A null or blank key is no node."""
     norm = norm_key_udf(bc)
     surf = (
         linked.select(norm("subject").alias("norm_key"))
         .union(linked.select(norm(F.col("object")["@value"]).alias("norm_key")))
-        .where(F.col("norm_key").isNotNull())
+        .where(F.col("norm_key") != "")
         .distinct()
         .withColumn("node", node_id("norm_key"))
     )
-    a = alias_dim.select(node_id("norm_key").alias("node"), "canonical_id").distinct()
+    keyed = alias_dim.where(F.col("norm_key").isNotNull())
+    a = keyed.select(node_id("norm_key").alias("node"), "canonical_id").distinct()
     hub = a.groupBy("canonical_id").agg(F.min("node").alias("hub"))
     edges = (
         a.join(hub, "canonical_id")
@@ -355,7 +356,7 @@ def _cc_reference(linked, alias_dim, bc):
         "component", F.coalesce("component", F.col("node"))
     )
     best = (
-        alias_dim.select(node_id("norm_key").alias("node"), "canonical_id")
+        keyed.select(node_id("norm_key").alias("node"), "canonical_id")
         .join(comp, "node", "left")
         .withColumn("component", F.coalesce("component", F.col("node")))
         .groupBy("component")
@@ -455,3 +456,35 @@ def test_canonicalize_equals_cc_path_on_empty_dictionary(spark, bc):
     alias_dim = alias_dim_with_key(spark.createDataFrame([], ALIAS_DDL), bc)
     rows = _assert_same_clusters(_hostile_linked(spark, alias_dim, bc), alias_dim, bc)
     assert rows and all(r[0] == r[1] and r[3] is None for r in rows)
+
+
+def test_blank_keys_link_nothing(spark, bc):
+    """A blank alias keys to null, as a blank surface does: neither
+    links, neither is a cluster member, and two ids that both have a
+    blank alias stay apart."""
+    alias_dim = alias_dim_with_key(
+        spark.createDataFrame(HOSTILE_ALIASES + [
+            ("", 50, "PER", 1.0), ("fifty", 50, "PER", 1.0),
+            ("  ", 51, "PER", 1.0), ("fifty one", 51, "PER", 1.0),
+        ], ALIAS_DDL),
+        bc,
+    )
+    assert alias_dim.where("alias in ('', '  ') and norm_key is not null").isEmpty()
+    triples = spark.createDataFrame(
+        [("fifty", {"@value": ""}), ("fifty one", {"@value": "  "}),
+         ("alpha", {"@value": "fifty"})],
+        SURFACES_DDL,
+    )
+    linked = link_triples(triples, alias_dim, bc)
+    got = {r["subject"]: r for r in linked.collect()}
+    for subject, cid in (("fifty", 50), ("fifty one", 51)):
+        assert got[subject]["subject_id"] == cid
+        assert got[subject]["object_id"] is None
+        assert got[subject]["object_value_norm_key"] is None
+    assert got["alpha"]["object_id"] == 50
+    rows = _assert_same_clusters(linked, alias_dim, bc)
+    assert all(r[2] for r in rows)
+    key = {s: " ".join(bc.value._alias_tokens(s)) for s in ("fifty", "fifty one")}
+    by_key = {r[2]: r for r in rows}
+    assert by_key[key["fifty"]][0] != by_key[key["fifty one"]][0]
+    assert by_key[key["fifty"]][3] == 50 and by_key[key["fifty one"]][3] == 51

@@ -133,3 +133,22 @@ def test_entities_table_clusters(spark, extractor, corpus_dfs, tmp_path_factory)
     assert moved > 0
     assert {cid is None for cid, _ in got.values()} == {True, False}
     assert ents.filter(F.col("representative").isNull()).count() == 0
+
+
+def test_resume_does_not_read_alias_dictionary(spark, extractor, tmp_path):
+    """A resume over a finished run skips linked and entity_clusters, so
+    it keys no dictionary: it succeeds after the files behind alias_df
+    are gone."""
+    import shutil
+
+    pages_df, _, alias_df = corpus_dataframes(spark, 20)
+    alias_path = str(tmp_path / "aliases")
+    alias_df.write.parquet(alias_path)
+    aliases = spark.read.parquet(alias_path)
+    pipe = KgPipeline(spark, str(tmp_path / "lake"), extractor, run_id="r1")
+    pipe.run(pages_df, aliases)
+    shutil.rmtree(alias_path)
+
+    res = pipe.run(pages_df, aliases, resume=True)
+    assert {"linked", "entity_clusters"} <= set(res.stages_skipped)
+    assert res.stages_run == ["kg_triples", "kg_entities"]

@@ -249,3 +249,46 @@ def test_entity_clusters_runs_no_python(spark, extractor, tmp_path):
         assert node not in p, node
     read_schema = p.split("ReadSchema", 1)[1][:200]
     assert "norm_key" in read_schema and "subject:" not in read_schema
+
+
+def test_linked_keys_triples_in_one_python_pass(spark, extractor, tmp_path):
+    """linked, built over a committed triples scan: both surface keys in
+    one Python pass over the triple rows, and the alias dimension keyed
+    on the driver, so its broadcast sides are local scans with no
+    Window, no shuffle and no Python."""
+    from deepie_spark.operators.linking import alias_dim_with_key, link_triples
+    from deepie_spark.sources.lakehouse import Lakehouse
+
+    pages_df, _, alias_df = corpus_dataframes(spark, 20)
+    lake = Lakehouse(tmp_path / "lake", spark)
+    bc = spark.sparkContext.broadcast(extractor)
+    lake.write_stage(extract_triples_fused(pages_df, bc), "triples")
+    linked = link_triples(lake.read("triples"), alias_dim_with_key(alias_df, bc), bc)
+    plan = linked._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1, plan
+    assert "Window" not in plan, plan
+    assert plan.count("BroadcastExchange") == 2, plan
+    assert plan.count("Exchange") == 2, plan  # the two broadcasts only
+    for side in plan.split("BroadcastExchange")[1:]:
+        assert side.split("\n")[1].lstrip(" :").startswith("+- LocalTableScan"), side
+
+
+def test_alias_components_launches_no_spark_job(spark, extractor):
+    """The entity graph is solved from the driver-keyed dimension with no
+    Spark job."""
+    from deepie_spark.operators.canonicalize import alias_components
+    from deepie_spark.operators.linking import alias_dim_with_key
+
+    _, _, alias_df = corpus_dataframes(spark, 1)
+    alias_dim = alias_dim_with_key(alias_df, spark.sparkContext.broadcast(extractor))
+    sc = spark.sparkContext
+    sc.setJobGroup("alias_components_probe", "alias_components")
+    try:
+        comps = alias_components(alias_dim)
+        assert sc.statusTracker().getJobIdsForGroup("alias_components_probe") == []
+        spark.range(3).count()  # control: a job in the group is seen
+        assert sc.statusTracker().getJobIdsForGroup("alias_components_probe")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert comps.count() > 0

@@ -24,18 +24,20 @@ partition-local component min); the rounds after it alternate
 large-star / small-star (Kiveris et al., "Connected Components in
 MapReduce and Beyond", SOCC'14 — public), all DataFrame joins, with a
 lineage cut each round (``localCheckpoint`` by default; reliable
-``checkpoint()`` or resumable parquet round snapshots on request — see
-``connected_components``).  The loop stops as soon as the edge set is a
-star forest (``_is_star_forest``: one aggregation and an emptiness
-check), which is the large-star/small-star fixpoint.  A graph whose
-edges fit one partition is a star forest after the contraction; the
-iteration cap guards pathological chains.
+``checkpoint()`` on request — see ``connected_components``).  The loop
+stops as soon as the edge set is a star forest (``_is_star_forest``: one
+aggregation and an emptiness check), which is the large-star/small-star
+fixpoint.  A graph whose edges fit one partition is a star forest after
+the contraction; a call that reaches ``MAX_ROUNDS`` without one raises.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# rounds one connected_components call may run, the contraction included
+MAX_ROUNDS = 25
 
 
 def _canon_edges(edges: DataFrame) -> DataFrame:
@@ -44,25 +46,6 @@ def _canon_edges(edges: DataFrame) -> DataFrame:
         F.least("src", "dst").alias("src"), F.greatest("src", "dst").alias("dst")
     )
     return e.where(F.col("src") != F.col("dst")).distinct()
-
-
-def _fingerprint_aggs():
-    """(n, h): edge count and an order-independent xxhash sum."""
-    return (
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(
-            F.pmod(
-                F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")),
-                F.lit(2**62),
-            ).cast("long"),
-            F.lit(0),
-        ).alias("h"),
-    )
-
-
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    row = edges.agg(*_fingerprint_aggs()).first()
-    return int(row["n"]), int(row["h"])
 
 
 def _is_star_forest(e: DataFrame) -> bool:
@@ -88,6 +71,29 @@ def _is_star_forest(e: DataFrame) -> bool:
     ).isEmpty()
 
 
+def _min_roots(pairs, nodes=()) -> dict:
+    """Union-find: {node: root} for every node of ``nodes`` and of the
+    ``pairs``, in first-seen order, where root is the min id of the
+    node's component."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for n in nodes:
+        parent.setdefault(n, n)
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)  # every root is its min
+    return {n: find(n) for n in parent}
+
+
 def _contract_partition(batches):
     """mapInPandas body: union-find over every edge of the partition,
     then (local min, node) for every node that is not its local root.
@@ -96,22 +102,12 @@ def _contract_partition(batches):
     unchanged; a graph held by one partition comes out a star forest."""
     import pandas as pd
 
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
-    for pdf in batches:
-        for a, b in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)  # every root is its min
-    pairs = [(r, n) for n in parent if (r := find(n)) != n]
+    roots = _min_roots(
+        pair
+        for pdf in batches
+        for pair in zip(pdf["src"].tolist(), pdf["dst"].tolist())
+    )
+    pairs = [(r, n) for n, r in roots.items() if r != n]
     if pairs:
         yield pd.DataFrame(pairs, columns=["src", "dst"])
 
@@ -163,69 +159,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out
 
 
-def _latest_round(spark, state_dir: str) -> int:
-    """Highest round index with a _SUCCESS-complete edge snapshot in
-    ``state_dir`` (0 = only the initial canonicalized edges), or -1.
-
-    Local-filesystem listing; on HDFS/S3 swap for the Hadoop
-    FileSystem API (the _SUCCESS-marker protocol is identical)."""
-    import os
-
-    if not os.path.isdir(state_dir):
-        return -1
-    best = -1
-    for name in os.listdir(state_dir):
-        suffix = name.removeprefix("round_")
-        if (
-            name.startswith("round_")
-            and suffix.isdigit()
-            and os.path.exists(os.path.join(state_dir, name, "_SUCCESS"))
-        ):
-            best = max(best, int(suffix))
-    return best
-
-
-def _read_input_fp(state_dir: str) -> tuple[int, int] | None:
-    """The input-edge fingerprint recorded when round 0 was written
-    (local filesystem, like ``_latest_round``; swap for the Hadoop
-    FileSystem API on HDFS/S3)."""
-    import json
-    import os
-
-    p = os.path.join(state_dir, "_input_fingerprint.json")
-    if not os.path.exists(p):
-        return None
-    with open(p) as f:
-        d = json.load(f)
-    return int(d["n"]), int(d["h"])
-
-
-def _write_input_fp(state_dir: str, fp: tuple[int, int]) -> None:
-    import json
-    import os
-
-    os.makedirs(state_dir, exist_ok=True)
-    tmp = os.path.join(state_dir, "_input_fingerprint.json.tmp")
-    with open(tmp, "w") as f:
-        json.dump({"n": fp[0], "h": fp[1]}, f)
-    os.replace(tmp, os.path.join(state_dir, "_input_fingerprint.json"))
-
-
-def _clear_rounds(state_dir: str) -> None:
-    import os
-    import shutil
-
-    if not os.path.isdir(state_dir):
-        return
-    for name in os.listdir(state_dir):
-        if name.startswith("round_"):
-            shutil.rmtree(os.path.join(state_dir, name), ignore_errors=True)
-    try:
-        os.remove(os.path.join(state_dir, "_input_fingerprint.json"))
-    except FileNotFoundError:
-        pass
-
-
 def _round0(edges: DataFrame) -> DataFrame:
     """Every input edge once as (least, greatest), self-loops and null
     endpoints kept: the round-0 cut and the node set's only source.
@@ -239,10 +172,7 @@ def _round0(edges: DataFrame) -> DataFrame:
 
 
 def connected_components(
-    edges: DataFrame,
-    max_iter: int = 25,
-    checkpoint_dir: str | None = None,
-    state_dir: str | None = None,
+    edges: DataFrame, checkpoint_dir: str | None = None
 ) -> DataFrame:
     """edges(src bigint, dst bigint) -> (node bigint, component bigint)
     where component = min node id of the cluster.
@@ -263,12 +193,14 @@ def connected_components(
     (``_is_star_forest``, tested before each such round): a star forest
     is their fixpoint, so the loop stops there with no confirmation
     round.  A cut that AQE coalesces to one partition is a star forest
-    after the contraction, and no star round runs.  ``max_iter`` caps
-    the rounds a call runs, counting the contraction as one.
+    after the contraction, and no star round runs.  A call that runs
+    ``MAX_ROUNDS`` rounds, counting the contraction as one, without
+    reaching a star forest raises ``RuntimeError``: below the fixpoint,
+    min(src) per dst is not the component.
 
-    Lineage/fault-tolerance modes for the per-round cut (each CC round
-    builds joins on the previous round's output; without a cut the plan
-    deepens geometrically):
+    Lineage modes for the per-round cut (each CC round builds joins on
+    the previous round's output; without a cut the plan deepens
+    geometrically):
 
     - default: ``localCheckpoint`` — cheapest (executor-local blocks),
       correct for lineage-cutting, but NOT executor-loss-safe: losing a
@@ -276,82 +208,32 @@ def connected_components(
     - ``checkpoint_dir``: ``DataFrame.checkpoint()`` to reliable
       storage (HDFS/S3) — executor loss recovers from the checkpoint
       files, the right mode for long CC runs on a 1000-executor
-      cluster;
-    - ``state_dir``: each round's edge set is written as a parquet
-      snapshot (``round_NNNN``, atomic via Spark's _SUCCESS marker) and
-      read back — survives full DRIVER loss: a rerun with the same
-      ``state_dir`` resumes from the last completed round instead of
-      restarting (kill-one-round test in test_canonicalize.py).
-      ``round_0000`` is the round-0 cut above, and a resumed run reads
-      its node set from it.  Resume is input-guarded: round 0 records a
-      fingerprint of that cut, and a resume recomputes it from
-      ``edges`` (one aggregation over the input); a rerun whose edges
-      changed (same state_dir, new graph) wipes the snapshots and
-      restarts instead of silently resuming the old graph.  A state
-      dir whose round 0 dropped self-loops (written before round 0 kept
-      them) restarts on an input with a self-loop or a null endpoint,
-      since its fingerprint mismatches; on any other input its
-      ``round_0000`` holds the same rows as the cut, so resuming it is
-      safe.  The fingerprint is observed in the ``round_0000`` write
-      job.  Every round's snapshot has the input's components, so a
-      resume from any completed round converges to the same answer.
-      Takes precedence over ``checkpoint_dir``.
+      cluster.
 
-    All three modes produce identical components (tested)."""
-    spark = edges.sparkSession
-    if checkpoint_dir is not None and state_dir is None:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
+    Both modes produce identical components (tested)."""
+    if checkpoint_dir is not None:
+        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
 
-    def cut(df: DataFrame, rnd: int) -> DataFrame:
-        if state_dir is not None:
-            path = f"{state_dir}/round_{rnd:04d}"
-            if rnd == 0:
-                # the input fingerprint, observed in the write job itself
-                obs = Observation()
-                df.observe(obs, *_fingerprint_aggs()).write.mode(
-                    "overwrite"
-                ).parquet(path)
-                m = obs.get
-                _write_input_fp(state_dir, (m["n"], m["h"]))
-            else:
-                df.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
+    def cut(df: DataFrame) -> DataFrame:
         if checkpoint_dir is not None:
             return df.checkpoint(eager=True)
         return df.localCheckpoint(eager=True)
 
-    last = _latest_round(spark, state_dir) if state_dir is not None else -1
-    if last >= 0:
-        # resume keys on the INPUT, not just the directory: a rerun
-        # that reuses state_dir after the upstream edge set changed
-        # must restart, or it silently resumes round snapshots of the
-        # OLD graph and emits components for edges that no longer
-        # exist.  Round 0 records the fingerprint of its cut; a resume
-        # recomputes it from the input (one aggregation — the price of
-        # not trusting the directory name) and restarts on mismatch or
-        # when no fingerprint was recorded.
-        stored = _read_input_fp(state_dir)
-        if stored is None or stored != _fingerprint(_round0(edges)):
-            _clear_rounds(state_dir)
-            last = -1
-    if last >= 0:
-        r0 = spark.read.parquet(f"{state_dir}/round_0000")
-        start = last + 1
-    else:
-        r0 = cut(_round0(edges), 0)
-        start = 1
-    if start == 1:
-        e = r0.where(F.col("src") != F.col("dst"))
-    else:
-        e = spark.read.parquet(f"{state_dir}/round_{last:04d}")
-    for rnd in range(start, start + max_iter):
-        if rnd == 1:
-            local = e.mapInPandas(_contract_partition, "src bigint, dst bigint")
-            e = cut(_canon_edges(local), rnd)
-            continue
+    r0 = cut(_round0(edges))
+    local = r0.where(F.col("src") != F.col("dst")).mapInPandas(
+        _contract_partition, "src bigint, dst bigint"
+    )
+    e = cut(_canon_edges(local))
+    for _ in range(MAX_ROUNDS - 1):
         if _is_star_forest(e):
             break
-        e = cut(_canon_edges(_small_star(_large_star(e))), rnd)
+        e = cut(_canon_edges(_small_star(_large_star(e))))
+    else:
+        if not _is_star_forest(e):
+            raise RuntimeError(
+                f"connected_components: no star forest after {MAX_ROUNDS} "
+                "rounds; the components would be wrong"
+            )
     nodes = (
         r0.select(F.col("src").alias("node"))
         .union(r0.select(F.col("dst").alias("node")))
@@ -389,32 +271,25 @@ def alias_components(alias_dim: DataFrame) -> DataFrame:
         .select(node_id("norm_key").alias("node"), "canonical_id")
         .collect()
     )
-    parent: dict[int, int] = {}
-
-    def find(x: int) -> int:
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
     first: dict = {}  # canonical_id -> its first alias node
     for node, cid in rows:
-        parent.setdefault(node, node)
         if cid is not None:
-            a, b = find(node), find(first.setdefault(cid, node))
-            parent[max(a, b)] = min(a, b)  # every root is its component's min
+            first.setdefault(cid, node)
+    roots = _min_roots(
+        ((node, first[cid]) for node, cid in rows if cid is not None),
+        nodes=(node for node, _ in rows),
+    )
     best: dict = {}
     for node, cid in rows:
         if cid is not None:
-            r = find(node)
+            r = roots[node]
             best[r] = min(best.get(r, cid), cid)
-    comps = [find(n) for n in parent]
     cid_type = alias_dim.schema["canonical_id"].dataType.simpleString()
     return alias_dim.sparkSession.createDataFrame(
         pa.table({
-            "node": list(parent),
-            "component": comps,
-            "cluster_canonical_id": [best.get(c) for c in comps],
+            "node": list(roots),
+            "component": list(roots.values()),
+            "cluster_canonical_id": [best.get(c) for c in roots.values()],
         }),
         f"node bigint, component bigint, cluster_canonical_id {cid_type}",
     )

@@ -215,32 +215,6 @@ class Lakehouse:
         always has its lineage row."""
         return self.exists(name)
 
-    # ---- bucketed tables (co-located joins) ----
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        table_name: str,
-        bucket_cols: list[str],
-        n_buckets: int = 32,
-    ) -> None:
-        """Persist as a bucketed+sorted catalog table: joins and
-        aggregations on the bucket columns need NO shuffle afterwards
-        (Iceberg equivalent: ``bucket(n, col)`` partition transform).
-        Both sides of a self/equi join bucketed the same way produce an
-        Exchange-free sort-merge join — the co-location strategy for
-        the repeated canonicalization/merge joins at crawl scale."""
-        (
-            df.write.mode("overwrite")
-            .bucketBy(n_buckets, *bucket_cols)
-            .sortBy(*bucket_cols)
-            .option("path", str(self.root / f"bucketed_{table_name}"))
-            .saveAsTable(table_name)
-        )
-
-    def read_table(self, table_name: str) -> DataFrame:
-        return self.spark.table(table_name)
-
     # ---- MERGE (upsert) ----
 
     def merge_upsert(self, updates: DataFrame, name: str, keys: list[str],

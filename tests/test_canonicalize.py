@@ -1,10 +1,10 @@
-import os
 import random
 from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
 
+from deepie_spark.operators import canonicalize
 from deepie_spark.operators.canonicalize import (
     _is_star_forest,
     canonicalize_entities,
@@ -68,10 +68,6 @@ ONE_PARTITION = {"spark.sql.shuffle.partitions": "1"}
 MANY_PARTITIONS = {"spark.sql.adaptive.coalescePartitions.enabled": "false"}
 
 
-def _rounds(state):
-    return sorted(d for d in os.listdir(state) if d.startswith("round_"))
-
-
 def _check(spark, edges):
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
     got = {
@@ -108,9 +104,9 @@ def test_cc_random_graph_matches_union_find(spark):
     _check(spark, edges)
 
 
-def test_cc_three_lineage_modes_identical(spark, tmp_path):
-    """localCheckpoint (default), reliable checkpoint(), and parquet
-    round snapshots must produce identical components."""
+def test_cc_two_lineage_modes_identical(spark, tmp_path):
+    """localCheckpoint (default) and reliable checkpoint() must produce
+    identical components."""
     rng = random.Random(11)
     nodes = list(range(1, 80))
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(100)]
@@ -124,11 +120,7 @@ def test_cc_three_lineage_modes_identical(spark, tmp_path):
             df, checkpoint_dir=str(tmp_path / "ckpt")
         ).collect()
     }
-    snap = {
-        r["node"]: r["component"]
-        for r in connected_components(df, state_dir=str(tmp_path / "state")).collect()
-    }
-    assert local == reliable == snap == want
+    assert local == reliable == want
     # reliable mode really wrote RDD checkpoint files
     import os
 
@@ -142,8 +134,8 @@ def test_cc_reads_edges_once_in_every_lineage_mode(spark, tmp_path):
     verify in dedup_clusters — once per side of a src/dst union).  A
     row-counting accumulator in a mapInPandas upstream of the edges
     sees each input row exactly once per call.  The graph has a
-    self-loop-only node (7) and a duplicated, reversed edge; every mode
-    matches union-find."""
+    self-loop-only node (7) and a duplicated, reversed edge; both modes
+    match union-find."""
     rng = random.Random(5)
     nodes = list(range(10, 60))
     edges = [(rng.choice(nodes), rng.choice(nodes)) for _ in range(60)]
@@ -152,8 +144,7 @@ def test_cc_reads_edges_once_in_every_lineage_mode(spark, tmp_path):
     assert want[7] == 7
     src = spark.createDataFrame(edges, "src bigint, dst bigint").repartition(3)
 
-    for mode in ({}, {"checkpoint_dir": str(tmp_path / "ckpt")},
-                 {"state_dir": str(tmp_path / "state")}):
+    for mode in ({}, {"checkpoint_dir": str(tmp_path / "ckpt")}):
         seen = spark.sparkContext.accumulator(0)
 
         def counted(it, seen=seen):
@@ -170,73 +161,16 @@ def test_cc_reads_edges_once_in_every_lineage_mode(spark, tmp_path):
         assert seen.value == len(edges), mode
 
 
-def test_cc_kill_one_round_resume(spark, tmp_path):
-    """Driver-loss resume: a run killed after one CC round (simulated
-    with max_iter=1 + state_dir) leaves _SUCCESS-complete round
-    snapshots; a rerun with the same state_dir resumes from the last
-    snapshot — writing only NEW rounds — and converges to the same
-    components as an uninterrupted run."""
-    # a long chain cut over several partitions needs large/small-star
-    # rounds after the partition-local contraction (round 1)
+def test_cc_round_cap_raises_instead_of_wrong_components(spark, monkeypatch):
+    """A chain cut over many partitions barely contracts in round 1, so
+    it needs star rounds: with the cap at 2 rounds (the contraction and
+    one star round) the edges are not yet a star forest, and the call
+    raises instead of returning min(src) per dst of them."""
     edges = [(i, i + 1) for i in range(1, 40)]
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    state = str(tmp_path / "cc_state")
-
-    with _sql_conf(spark, MANY_PARTITIONS):
-        connected_components(df, max_iter=1, state_dir=state).collect()  # "crash"
-        rounds_before = _rounds(state)
-        assert rounds_before == ["round_0000", "round_0001"]
-        mtime_before = os.path.getmtime(
-            os.path.join(state, "round_0001", "_SUCCESS")
-        )
-
-        got = {
-            r["node"]: r["component"]
-            for r in connected_components(df, state_dir=state).collect()
-        }
-    rounds_after = _rounds(state)
-    # resume appended rounds >= 2 instead of rewriting 0/1 from scratch
-    assert rounds_after[: len(rounds_before)] == rounds_before
-    assert len(rounds_after) > len(rounds_before)
-    assert os.path.getmtime(os.path.join(state, "round_0001", "_SUCCESS")) == mtime_before
-    assert got == _cc_oracle(edges)
-
-
-def test_cc_state_dir_rejects_stale_snapshots(spark, tmp_path):
-    """Reusing a state_dir after the upstream edge set changed must NOT
-    resume the old graph's round snapshots: round 0 records an input
-    fingerprint, and a rerun with different edges wipes the stale
-    rounds and recomputes components for the NEW graph."""
-    import os
-
-    state = str(tmp_path / "cc_state_stale")
-    edges_a = [(1, 2), (2, 3), (10, 11)]
-    df_a = spark.createDataFrame(edges_a, "src bigint, dst bigint")
-    connected_components(df_a, state_dir=state).collect()
-    assert os.path.exists(os.path.join(state, "_input_fingerprint.json"))
-
-    # upstream changed: 3 now links to 10, merging the two clusters
-    edges_b = [(1, 2), (2, 3), (3, 10), (10, 11)]
-    df_b = spark.createDataFrame(edges_b, "src bigint, dst bigint")
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(df_b, state_dir=state).collect()
-    }
-    assert got == _cc_oracle(edges_b)  # NOT the stale two-cluster answer
-    assert len(set(got.values())) == 1
-
-    # same input again: resumes (round snapshots survive untouched)
-    rounds = sorted(d for d in os.listdir(state) if d.startswith("round_"))
-    mtimes = {
-        d: os.path.getmtime(os.path.join(state, d, "_SUCCESS")) for d in rounds
-    }
-    got2 = {
-        r["node"]: r["component"]
-        for r in connected_components(df_b, state_dir=state).collect()
-    }
-    assert got2 == got
-    for d in rounds:
-        assert os.path.getmtime(os.path.join(state, d, "_SUCCESS")) == mtimes[d]
+    monkeypatch.setattr(canonicalize, "MAX_ROUNDS", 2)
+    with _sql_conf(spark, MANY_PARTITIONS), pytest.raises(RuntimeError):
+        connected_components(df).collect()
 
 
 def test_is_star_forest_hand_cases(spark):
@@ -299,29 +233,36 @@ def _cc_oracle_nulls(edges):
     ids=["one", "many"],
 )
 def test_cc_random_graph_matches_union_find_in_every_mode(
-    spark, tmp_path, partitioning, seed
+    spark, tmp_path, monkeypatch, partitioning, seed
 ):
-    """A random graph matches union-find in all three lineage modes,
-    with the round-0 cut in one partition (the contraction leaves a
-    star forest: round_0000 and round_0001 only) and in many (star
-    rounds run after the contraction)."""
+    """A random graph matches union-find in both lineage modes, with
+    the round-0 cut in one partition (the contraction leaves a star
+    forest: no star round runs) and in many (star rounds run after the
+    contraction)."""
     edges = _random_graph(random.Random(seed))
     want = _cc_oracle_nulls(edges)
     assert None in want and len(set(want.values())) > 5
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    state = str(tmp_path / "state")
+    star_rounds = []
+    large_star = canonicalize._large_star
+
+    def spy(e):
+        star_rounds.append(e)
+        return large_star(e)
+
+    monkeypatch.setattr(canonicalize, "_large_star", spy)
     with _sql_conf(spark, partitioning):
-        for mode in ({}, {"checkpoint_dir": str(tmp_path / "ckpt")},
-                     {"state_dir": state}):
+        for mode in ({}, {"checkpoint_dir": str(tmp_path / "ckpt")}):
+            star_rounds.clear()
             got = {
                 r["node"]: r["component"]
                 for r in connected_components(df, **mode).collect()
             }
             assert got == want, mode
-    if partitioning is ONE_PARTITION:
-        assert _rounds(state) == ["round_0000", "round_0001"]
-    else:
-        assert len(_rounds(state)) > 2
+            if partitioning is ONE_PARTITION:
+                assert len(star_rounds) == 0, mode
+            else:
+                assert len(star_rounds) >= 1, mode
 
 
 # -- canonicalize_entities vs the connected-components path --------------

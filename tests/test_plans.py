@@ -6,7 +6,6 @@ is shuffle-free, salted aggregation is two-phase.
 """
 
 import pytest
-from pyspark.sql import functions as F
 
 import __spark_entry__ as em
 from deepie_spark.operators.extract import extract_triples_fused
@@ -69,31 +68,6 @@ def test_salted_count_is_two_phase(spark):
 def test_mention_alias_join_broadcasts(spark):
     p = plan_of(em.q_mention_candidates(spark, SF))
     assert "BroadcastNestedLoopJoin" in p or "BroadcastHashJoin" in p
-
-
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Bucketed tables co-locate join keys: the equi-join plan has no
-    Exchange on either side (the Iceberg bucket(url) strategy)."""
-    from deepie_spark.sources.lakehouse import Lakehouse
-
-    lake = Lakehouse(tmp_path / "lake", spark)
-    a = spark.range(0, 2000).withColumn("v", F.col("id") * 2)
-    b = spark.range(0, 2000).withColumn("w", F.col("id") + 1)
-    lake.write_bucketed(a, "bk_a", ["id"], n_buckets=8)
-    lake.write_bucketed(b, "bk_b", ["id"], n_buckets=8)
-    # force the sort-merge path (at real scale neither side broadcasts)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = lake.read_table("bk_a").join(lake.read_table("bk_b"), "id")
-        p = plan_of(joined)
-        assert "SortMergeJoin" in p
-        assert "Exchange" not in p  # co-located: no shuffle at all
-        assert joined.count() == 2000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-        spark.sql("DROP TABLE IF EXISTS bk_a")
-        spark.sql("DROP TABLE IF EXISTS bk_b")
 
 
 def test_build_vocab_no_single_partition_funnel(spark):

@@ -60,13 +60,11 @@ class KgPipeline:
         lake_root: str,
         extractor,
         run_id: str = "run0",
-        url_buckets: int = 32,
     ):
         self.spark = spark
         self.lake = Lakehouse(lake_root, spark)
         self.extractor_bc = spark.sparkContext.broadcast(extractor)
         self.run_id = run_id
-        self.url_buckets = url_buckets
 
     # -- stage definitions -------------------------------------------------
 
@@ -89,14 +87,8 @@ class KgPipeline:
     ) -> PipelineResult:
         res = PipelineResult()
         bc = self.extractor_bc
-        # bucket column: deterministic url bucket, the partition handle
-        # for per-partition lineage and (on Iceberg) bucket(url) spec
-        bucket = F.pmod(F.xxhash64("url"), F.lit(self.url_buckets)).cast("int")
-
         texts = self._stage(
-            "texts",
-            lambda: ex_ops.stage_texts(pages_df).withColumn("url_bucket", bucket),
-            res, resume,
+            "texts", lambda: ex_ops.stage_texts(pages_df), res, resume
         )
         self._stage("mentions", lambda: detect_mentions(texts, bc), res, resume)
         # rebalance: the kernel keeps one output partition per texts

@@ -2,17 +2,20 @@
 per-partition lineage, idempotent resume.
 
 The target deployment is Iceberg (``MERGE INTO kg.triples``, snapshot
-isolation, partition spec ``bucket(url)``) — this container ships no
-Iceberg runtime jar, so the same semantics are provided over plain
-parquet with an atomic version-pointer protocol:
+isolation); without an Iceberg runtime jar on the classpath, the same
+semantics are provided over plain parquet with an atomic
+version-pointer protocol:
 
     <root>/<table>/v=N/...parquet     (immutable version directories)
     <root>/<table>/_VERSION           (pointer file, atomic rename)
     <root>/_lineage/...parquet        (append-only stage lineage)
     <root>/_lineage_parts/...parquet  (per-file row counts)
 
-Lineage is observed in the write job (``DataFrame.observe``: rows + a
-content fingerprint); per-partition rows come from the parquet footers.
+There is one writer, ``write_stage``, and one MERGE on top of it,
+``merge_upsert``, used by the batch pipeline and the streaming ingest
+alike.  So every committed version gets the same lineage record: it is
+observed in the write job (``DataFrame.observe``: rows + a content
+fingerprint), and per-partition rows come from the parquet footers.
 
 Swapping to Iceberg on a real cluster changes only this module: every
 ``merge_upsert`` maps to one ``MERGE INTO``, every ``write_stage`` to an
@@ -31,7 +34,6 @@ from __future__ import annotations
 
 import json
 import os
-import shutil
 import time
 import uuid
 from pathlib import Path
@@ -84,18 +86,6 @@ class Lakehouse:
             return None
         return int(json.loads(p.read_text())["version"])
 
-    def layout(self, name: str) -> dict | None:
-        """Physical-layout metadata recorded at commit time (None for
-        plain stage tables): ``{"bucketed": True, "n_buckets": K,
-        "keys": [...]}`` for tables written by
-        :meth:`merge_upsert_bucketed`.  The Iceberg analogue is the
-        table's partition spec — it travels with the table, so a later
-        writer cannot silently merge in a different hash space."""
-        p = self._pointer(name)
-        if not p.exists():
-            return None
-        return json.loads(p.read_text()).get("layout")
-
     def _data_path(self, name: str, version: int) -> Path:
         return self._table_dir(name) / f"v={version}"
 
@@ -107,12 +97,7 @@ class Lakehouse:
         v = self.current_version(name)
         if v is None:
             raise FileNotFoundError(f"lakehouse table {name} does not exist")
-        df = self.spark.read.parquet(str(self._data_path(name, v)))
-        # the bucket id is physical layout, not data: consumers of a
-        # bucketed table see the same schema as a plain stage table
-        if (self.layout(name) or {}).get("bucketed") and "_kb" in df.columns:
-            df = df.drop("_kb")
-        return df
+        return self.spark.read.parquet(str(self._data_path(name, v)))
 
     def _append_lineage(self, dirname: str, schema, rows: list[tuple]) -> None:
         """Lineage rows are driver-side METADATA (a handful of scalars
@@ -133,12 +118,9 @@ class Lakehouse:
         )
         pq.write_table(table, d / f"part-{uuid.uuid4().hex}.parquet")
 
-    def _commit(self, name: str, version: int, layout: dict | None = None) -> None:
+    def _commit(self, name: str, version: int) -> None:
         tmp = self._pointer(name).with_suffix(f".tmp-{uuid.uuid4().hex[:8]}")
-        meta = {"version": version, "ts": time.time()}
-        if layout:
-            meta["layout"] = layout
-        tmp.write_text(json.dumps(meta))
+        tmp.write_text(json.dumps({"version": version, "ts": time.time()}))
         os.replace(tmp, self._pointer(name))  # atomic pointer swap
 
     # ---- stage writes with lineage ----
@@ -149,15 +131,6 @@ class Lakehouse:
         import pyarrow.parquet as pq
 
         t0 = time.time()
-        lay = self.layout(name)
-        if lay and lay.get("bucketed"):
-            raise ValueError(
-                f"table {name} has bucketed layout "
-                f"(n_buckets={lay['n_buckets']}, keys={lay['keys']}); "
-                f"plain write_stage/merge_upsert would treat _kb as a "
-                f"data column and break bucket pruning — use "
-                f"merge_upsert_bucketed"
-            )
         v = (self.current_version(name) or 0) + 1
         path = self._data_path(name, v)
         self._table_dir(name).mkdir(parents=True, exist_ok=True)
@@ -210,7 +183,7 @@ class Lakehouse:
     def stage_done(self, name: str, run_id: str) -> bool:
         """Idempotent-resume check: stage committed by this run (or any
         prior run) with a readable current version.  The pointer alone,
-        no Spark job: both writers append the lineage row before
+        no Spark job: ``write_stage`` appends the lineage row before
         ``_commit`` swaps the pointer, so a committed, readable version
         always has its lineage row."""
         return self.exists(name)
@@ -223,9 +196,13 @@ class Lakehouse:
         THEN UPDATE WHEN NOT MATCHED THEN INSERT`` semantics: rows with
         matching keys are replaced, others inserted.
 
-        Rewrites the WHOLE table — fine for small state tables; use
-        :meth:`merge_upsert_bucketed` for the incremental-crawl graph
-        table (only buckets containing matched keys are rewritten)."""
+        Rewrites the WHOLE table through :meth:`write_stage`, so a
+        MERGE version records the same lineage as a stage version.  A
+        bucket-pruned rewrite (hash-partition on the keys, hardlink the
+        untouched buckets) was measured and dropped: at ~1.6 triple keys
+        per page a 60-page micro-batch already touches 29 of 32 buckets,
+        and the pipeline's MERGEs got slower with the partitioned
+        write (kg_build cold op 13.1 s -> 16.7 s on 4 cores)."""
         updates = updates.dropDuplicates(keys)
         if self.exists(name):
             cur = self.read(name)
@@ -234,123 +211,3 @@ class Lakehouse:
         else:
             merged = updates
         return self.write_stage(merged, name, run_id=run_id)
-
-    # ---- bucket-pruned MERGE ----
-
-    @staticmethod
-    def _key_bucket(keys: list[str], n_buckets: int):
-        return F.pmod(
-            F.xxhash64(*[F.col(k).cast("string") for k in keys]),
-            F.lit(n_buckets),
-        ).cast("int")
-
-    def merge_upsert_bucketed(
-        self, updates: DataFrame, name: str, keys: list[str],
-        n_buckets: int = 32, run_id: str = "adhoc",
-    ) -> int:
-        """MERGE that rewrites ONLY the key-buckets the updates touch.
-
-        Layout: every version directory is hash-partitioned on an
-        internal ``_kb = pmod(xxhash64(keys), n_buckets)`` column
-        (Iceberg: ``bucket(n, key)`` partition transform).  A merge
-        computes the set of touched buckets (<= n_buckets ints on the
-        driver), HARDLINKS the untouched buckets' parquet files into
-        the new version directory (the parquet-lite analogue of Iceberg
-        manifests reusing unchanged data files — no data movement), and
-        runs the anti-join + union over the touched buckets only.  An
-        incremental crawl merging 0.1% of urls rewrites ~0.1% of the
-        table instead of 100%.
-
-        Crash-safe and idempotent: everything is staged into a
-        ``v=N.tmp-<uuid>`` directory and atomically renamed to ``v=N``
-        before the pointer commit; a crash at any point leaves the
-        committed version untouched and a retry re-derives the same
-        next version from scratch (stale tmp/uncommitted dirs are
-        swept first).  The layout (n_buckets + keys) is recorded in the
-        version pointer and validated on every later merge — merging
-        with a different bucket count, or onto a table created by
-        ``write_stage``/``merge_upsert``, raises instead of silently
-        hardlinking buckets keyed in a different hash space (which
-        would commit duplicate keys)."""
-        t0 = time.time()
-        lay = self.layout(name)
-        v_old = self.current_version(name)
-        if v_old is not None:
-            if not (lay and lay.get("bucketed")):
-                raise ValueError(
-                    f"table {name} exists without bucketed layout; "
-                    f"merge_upsert_bucketed onto it would hash-partition "
-                    f"only the new rows — use merge_upsert, or create the "
-                    f"table with merge_upsert_bucketed from the start"
-                )
-            if lay["n_buckets"] != n_buckets or lay["keys"] != list(keys):
-                raise ValueError(
-                    f"table {name} is bucketed with n_buckets="
-                    f"{lay['n_buckets']} keys={lay['keys']}; merge called "
-                    f"with n_buckets={n_buckets} keys={list(keys)} — "
-                    f"bucket ids would land in a different hash space"
-                )
-        kb = self._key_bucket(keys, n_buckets)
-        updates = updates.dropDuplicates(keys).withColumn("_kb", kb)
-        v = (v_old or 0) + 1
-        new_path = self._data_path(name, v)
-        tdir = self._table_dir(name)
-        tdir.mkdir(parents=True, exist_ok=True)
-        # crash-retry hygiene: sweep uncommitted leftovers (a tmp dir
-        # from a mid-write crash, or v=N itself from a crash between
-        # rename and pointer commit) — single-writer by design
-        for stale in tdir.glob("v=*.tmp-*"):
-            shutil.rmtree(stale, ignore_errors=True)
-        if new_path.exists():
-            shutil.rmtree(new_path)
-        tmp_path = tdir / f"v={v}.tmp-{uuid.uuid4().hex[:8]}"
-
-        # rows written (and, on the first write, the buckets) are
-        # observed in the write job itself, not read back
-        obs = Observation()
-        rows = F.count(F.lit(1)).alias("rows")
-        if v_old is None:
-            updates.observe(
-                obs, rows, F.collect_set("_kb").alias("touched")
-            ).write.mode("overwrite").partitionBy("_kb").parquet(str(tmp_path))
-            touched = sorted(obs.get["touched"])
-        else:
-            old_path = self._data_path(name, v_old)
-            touched = sorted(
-                r["_kb"] for r in updates.select("_kb").distinct().collect()
-            )
-            touched_set = set(touched)
-            tmp_path.mkdir(parents=True, exist_ok=True)
-            # manifest reuse: untouched bucket dirs hardlink over
-            for d in sorted(old_path.glob("_kb=*")):
-                b = int(d.name.split("=", 1)[1])
-                if b in touched_set:
-                    continue
-                nd = tmp_path / d.name
-                nd.mkdir(exist_ok=True)
-                for f in d.iterdir():
-                    if f.is_file():
-                        os.link(f, nd / f.name)
-            # rewrite touched buckets only: partition pruning makes the
-            # scan read just those directories
-            cur = self.spark.read.parquet(str(old_path)).where(
-                F.col("_kb").isin(touched)
-            )
-            keep = cur.join(updates.select(*keys).distinct(), keys, "left_anti")
-            merged = keep.unionByName(updates)
-            merged.observe(obs, rows).write.mode("append").partitionBy(
-                "_kb").parquet(str(tmp_path))
-        rewritten = obs.get["rows"]
-        os.replace(tmp_path, new_path)  # atomic: v=N appears fully-built
-
-        wall_ms = int((time.time() - t0) * 1000)
-        self._append_lineage(
-            "_lineage", _LINEAGE_SCHEMA,
-            [(run_id, name, v, rewritten, len(touched), 0, wall_ms,
-              time.time())],
-        )
-        self._commit(
-            name, v,
-            layout={"bucketed": True, "n_buckets": n_buckets, "keys": list(keys)},
-        )
-        return v

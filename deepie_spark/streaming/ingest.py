@@ -28,18 +28,19 @@ def stream_pages_to_kg(
     lake_root: str,
     checkpoint_dir: str,
     trigger_available_now: bool = True,
-    n_buckets: int = 32,
 ):
-    """pages stream -> fused extraction -> bucket-pruned MERGE into
-    kg_triples per micro-batch.  Returns the StreamingQuery.
+    """pages stream -> fused extraction -> MERGE into kg_triples per
+    micro-batch.  Returns the StreamingQuery.
 
-    The MERGE is ``merge_upsert_bucketed``: a micro-batch touching k of
-    the table's key-buckets rewrites only those k buckets and hardlinks
-    the rest — at crawl scale each micro-batch is a sliver of the
-    table, so the full-rewrite ``merge_upsert`` would turn a streaming
-    ingest into a per-batch full-table rewrite.  Replays (checkpoint
-    recovery re-delivering a micro-batch) stay idempotent: same
-    triple_key set upserts to the same state."""
+    The MERGE is the pipeline's ``merge_upsert`` on ``triple_key``, so
+    every micro-batch commits a ``kg_triples`` version with the same
+    lineage as a batch stage: rows, fingerprint and per-file rows.
+    Replays (checkpoint recovery re-delivering a micro-batch) stay
+    idempotent: the same triple_key set upserts to the same state.  A
+    ``kg_triples`` written by an older version of this module, whose
+    MERGE hash-partitioned the table on an extra bucket column, does
+    not union with the new rows: restart such an ingest under a new
+    lake root."""
     lake = Lakehouse(lake_root, spark)
 
     def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
@@ -50,8 +51,8 @@ def stream_pages_to_kg(
             "triple_key",
             F.xxhash64("url", "subject", "predicate", "object_key"),
         )
-        lake.merge_upsert_bucketed(
-            keyed, "kg_triples", ["triple_key"], n_buckets=n_buckets,
+        lake.merge_upsert(
+            keyed, "kg_triples", ["triple_key"],
             run_id=f"stream-batch-{batch_id}",
         )
 

@@ -50,32 +50,40 @@ def _readback_fingerprint(df):
     return fp or 0
 
 
+def _assert_lineage_matches(lake, stage):
+    """The committed version of ``stage`` has one lineage row whose
+    observed rows and fingerprint equal a read-back of that version,
+    and per-file lineage rows that sum to those rows, one per parquet
+    file."""
+    v = lake.current_version(stage)
+    [row] = lake.lineage().filter(
+        (F.col("stage") == stage) & (F.col("version") == v)
+    ).collect()
+    out = lake.read(stage)
+    assert row["output_rows"] == out.count() > 0, stage
+    assert row["fingerprint"] == _readback_fingerprint(out), stage
+    files = list(lake._data_path(stage, v).glob("*.parquet"))
+    parts = lake.lineage_parts().filter(
+        (F.col("stage") == stage) & (F.col("version") == v)
+    ).collect()
+    assert len(parts) == len(files) == row["n_partitions"], stage
+    assert sum(p["rows"] for p in parts) == row["output_rows"], stage
+
+
 def test_observed_lineage_matches_readback(spark, extractor, tmp_path):
-    """Every stage a pipeline run commits has a lineage row whose
-    observed rows and fingerprint equal a read-back of the committed
-    version, and per-file lineage rows that sum to those rows, one per
-    parquet file."""
+    """Every stage a pipeline run commits has a lineage row that
+    matches a read-back of the committed version."""
     pages_df, _, alias_df = corpus_dataframes(spark, 60)
     pipe = KgPipeline(spark, str(tmp_path / "lake"), extractor, run_id="r1")
     pipe.run(pages_df, alias_df)
     lake = pipe.lake
-    lin = {(r["stage"], r["version"]): r for r in lake.lineage().collect()}
-    parts = lake.lineage_parts().collect()
     stages = {
         "texts", "mentions", "triples", "linked",
         "entity_clusters", "kg_triples", "kg_entities",
     }
-    assert {s for s, _ in lin} == stages
+    assert {r["stage"] for r in lake.lineage().collect()} == stages
     for stage in stages:
-        v = lake.current_version(stage)
-        row = lin[(stage, v)]
-        out = lake.read(stage)
-        assert row["output_rows"] == out.count() > 0, stage
-        assert row["fingerprint"] == _readback_fingerprint(out), stage
-        files = list(lake._data_path(stage, v).glob("*.parquet"))
-        mine = [p for p in parts if p["stage"] == stage and p["version"] == v]
-        assert len(mine) == len(files) == row["n_partitions"], stage
-        assert sum(p["rows"] for p in mine) == row["output_rows"], stage
+        _assert_lineage_matches(lake, stage)
 
 
 def test_fingerprint_independent_of_partitioning(spark, lake):
@@ -154,113 +162,22 @@ def test_merge_is_idempotent(spark, lake):
     assert lake.read("m2").count() == 1
 
 
-def test_merge_upsert_bucketed_prunes_rewrite(spark, lake):
-    """Bucket-pruned MERGE: only touched key-buckets are rewritten;
-    untouched buckets' parquet files are HARDLINKED (same inode) into
-    the new version — the Iceberg manifest-reuse analogue."""
-    import os
+def test_merge_crash_retry_idempotent(spark, lake):
+    """A crash after the data-dir write but before the pointer commit
+    must not break the retry: a stale, uncommitted v=2 directory is
+    overwritten and the retry commits v=2 with the merged rows."""
+    import shutil
 
-    base = spark.range(0, 2000).select(
-        F.col("id").alias("k"), (F.col("id") * 10).alias("v")
-    )
-    v1 = lake.merge_upsert_bucketed(base, "kg", ["k"], n_buckets=16)
-    assert v1 == 1
-
-    upd = spark.createDataFrame(
-        [(5, 999), (2005, 42)], "k bigint, v bigint"
-    )  # one update + one insert, landing in 1-2 buckets
-    v2 = lake.merge_upsert_bucketed(upd, "kg", ["k"], n_buckets=16)
-    assert v2 == 2
-
-    got = {r["k"]: r["v"] for r in lake.read("kg").collect()}
-    assert got[5] == 999 and got[2005] == 42 and got[6] == 60
-    assert len(got) == 2001
-
-    # physical pruning: untouched bucket files share inodes with v1
-    d1 = lake._data_path("kg", 1)
-    d2 = lake._data_path("kg", 2)
-    from deepie_spark.sources.lakehouse import Lakehouse as LH
-    touched = {
-        r["b"] for r in upd.select(
-            LH._key_bucket(["k"], 16).alias("b")
-        ).distinct().collect()
-    }
-    linked = rewritten = 0
-    for bdir in d2.glob("_kb=*"):
-        b = int(bdir.name.split("=")[1])
-        old = d1 / bdir.name
-        inodes_old = {f.stat().st_ino for f in old.iterdir()} if old.exists() else set()
-        inodes_new = {f.stat().st_ino for f in bdir.iterdir() if f.is_file()}
-        if b in touched:
-            assert not (inodes_new & inodes_old)  # actually rewritten
-            rewritten += 1
-        else:
-            assert inodes_new == inodes_old  # hardlinked, zero copy
-            linked += 1
-    assert rewritten == len(touched) and linked >= 14
-
-    # merge lineage row records the pruned write
-    lin = lake.lineage().filter("stage = 'kg' and version = 2").first()
-    assert lin["n_partitions"] == len(touched)
-
-
-def test_bucketed_layout_recorded_and_kb_hidden(spark, lake):
-    base = spark.createDataFrame([(1, "a")], "k bigint, v string")
-    lake.merge_upsert_bucketed(base, "kg2", ["k"], n_buckets=8)
-    assert lake.layout("kg2") == {
-        "bucketed": True, "n_buckets": 8, "keys": ["k"]
-    }
-    # consumers see the logical schema — no internal _kb column
-    assert set(lake.read("kg2").columns) == {"k", "v"}
-    # plain stage tables carry no layout
-    lake.write_stage(spark.range(3), "plain")
-    assert lake.layout("plain") is None
-
-
-def test_bucketed_merge_rejects_layout_mismatch(spark, lake):
-    df = spark.createDataFrame([(1, "a")], "k bigint, v string")
-    lake.merge_upsert_bucketed(df, "kg3", ["k"], n_buckets=8)
-    with pytest.raises(ValueError, match="different hash space"):
-        lake.merge_upsert_bucketed(df, "kg3", ["k"], n_buckets=16)
-    with pytest.raises(ValueError, match="different hash space"):
-        lake.merge_upsert_bucketed(
-            df.withColumnRenamed("v", "k2").withColumn("v", F.lit("x")),
-            "kg3", ["k", "k2"], n_buckets=8,
-        )
-    # bucketed merge onto a plain table: refuse (old-bucket hardlinks
-    # would be keyed in a different hash space)
-    lake.merge_upsert(df, "plain2", ["k"])
-    with pytest.raises(ValueError, match="without bucketed layout"):
-        lake.merge_upsert_bucketed(df, "plain2", ["k"], n_buckets=8)
-    # and the reverse: plain writes onto a bucketed table refuse too
-    with pytest.raises(ValueError, match="bucketed layout"):
-        lake.merge_upsert(df, "kg3", ["k"])
-    with pytest.raises(ValueError, match="bucketed layout"):
-        lake.write_stage(df, "kg3")
-
-
-def test_bucketed_merge_crash_retry_idempotent(spark, lake):
-    """A crash after data-dir writes but before the pointer commit must
-    not break the retry (the round-2 failure mode: os.link hitting
-    FileExistsError on leftover v=N dirs)."""
     base = spark.range(0, 200).select(
         F.col("id").alias("k"), (F.col("id") * 10).alias("v")
     )
-    lake.merge_upsert_bucketed(base, "kg4", ["k"], n_buckets=8)
+    lake.merge_upsert(base, "kg4", ["k"])
     upd = spark.createDataFrame([(5, 999)], "k bigint, v bigint")
 
-    # simulate: a previous attempt died after building v=2 (fully or
-    # partially) without committing the pointer
-    import shutil
+    # simulate: a previous attempt died after building v=2 without
+    # committing the pointer
+    shutil.copytree(lake._data_path("kg4", 1), lake._data_path("kg4", 2))
 
-    v2 = lake._data_path("kg4", 2)
-    v1 = lake._data_path("kg4", 1)
-    shutil.copytree(v1, v2)  # stale, uncommitted version dir
-    (lake._table_dir("kg4") / "v=2.tmp-deadbeef").mkdir()  # stale tmp
-
-    got_v = lake.merge_upsert_bucketed(upd, "kg4", ["k"], n_buckets=8)
-    assert got_v == 2
+    assert lake.merge_upsert(upd, "kg4", ["k"]) == 2
     got = {r["k"]: r["v"] for r in lake.read("kg4").collect()}
     assert got[5] == 999 and got[6] == 60 and len(got) == 200
-    # stale tmp dirs were swept
-    assert not list(lake._table_dir("kg4").glob("v=*.tmp-*"))

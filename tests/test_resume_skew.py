@@ -33,23 +33,24 @@ def _kg_state(lake):
     return keys, entities
 
 
-@pytest.mark.parametrize("killed", STAGES)
+@pytest.mark.parametrize("killed", STAGES + KG_TABLES)
 def test_resume_after_partial_crash(
     spark, extractor, crash_corpus, uninterrupted, tmp_path, monkeypatch, killed
 ):
-    """A job killed while committing stage k (its data and lineage
-    written, its pointer not swapped): a fresh pipeline with the same
-    run_id skips the stages before k, runs k and every later stage, and
-    ends with the kg tables of an uninterrupted run."""
+    """A job killed while committing stage or MERGE k (its data and
+    lineage written, its pointer not swapped): a fresh pipeline with the
+    same run_id skips the stages before k, runs k and every later stage,
+    MERGEs both kg tables again, and ends with the kg tables of an
+    uninterrupted run."""
     pages_df, _, alias_df = crash_corpus
     root = str(tmp_path / "lake")
     crashed = KgPipeline(spark, root, extractor, run_id="r1")
     commit = crashed.lake._commit
 
-    def kill_at(name, version, layout=None):
+    def kill_at(name, version):
         if name == killed:
             raise RuntimeError(f"killed before committing {name}")
-        commit(name, version, layout)
+        commit(name, version)
 
     monkeypatch.setattr(crashed.lake, "_commit", kill_at)
     with pytest.raises(RuntimeError, match="killed before committing"):
@@ -58,7 +59,7 @@ def test_resume_after_partial_crash(
     # resume with a NEW pipeline object (fresh process semantics)
     resumed = KgPipeline(spark, root, extractor, run_id="r1")
     res = resumed.run(pages_df, alias_df, resume=True)
-    k = STAGES.index(killed)
+    k = (STAGES + KG_TABLES).index(killed)
     assert res.stages_skipped == STAGES[:k]
     assert res.stages_run == STAGES[k:] + KG_TABLES
 
